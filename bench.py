@@ -252,9 +252,8 @@ def _noop(df) -> None:
 # unfalsifiable under drift (the r12 driver run read 36.1s for an IVF
 # build the same tree measures at 5-8s), so bench re-pays this chain in
 # SPARK_GRAFT_ONCE_REPEATS extra FRESH sessions and reports the median;
-# all samples ship in BENCH_DETAIL. Stream-drain once keys are excluded:
-# their drain memo is process-global per sf_dir, so an in-process fresh
-# session would time a memoized parquet read, not the drain.
+# all samples ship in BENCH_DETAIL. Stream-drain once keys are not
+# replayed (single sample each).
 ONCE_CHAIN: list[tuple[str, str]] = [
     ("once.incr_monthly_trends_refresh_init", "incr_monthly_trends_refresh"),
     ("once.incr_customer_orders_refresh_init", "incr_customer_orders_refresh"),
@@ -286,9 +285,9 @@ _ONCE_WARMERS = ("text_stats", "sim_ivf_topk", "dedup_minhash_lsh", "graph_pager
 def _repeat_once_chain(sf_dir: str) -> dict[str, float]:
     """Re-pay every ONCE_CHAIN key in one fresh session (same JVM —
     executor startup stays outside the timings via the same warm-up the
-    main session gets). ``memo.clear()`` first: session-keyed memos are
-    cold already, but the process-global ones (the materialized IVF/band
-    stores) must be dropped or the 'build' keys would time a store READ."""
+    main session gets). Every memo entry is keyed by session, so the new
+    session starts cold; ``memo.clear()`` first releases the previous
+    session's persisted blocks and temp stores."""
     from databricks_incremental_lakehouse_spark import memo as _memo
     from databricks_incremental_lakehouse_spark.registry import QUERIES
 
@@ -766,8 +765,12 @@ def main() -> None:
     from databricks_incremental_lakehouse_spark import memo as _memo
     from databricks_incremental_lakehouse_spark.llmdata import incrstats as _incr
 
-    root = _incr._warehouse_for(spark, sf_dir)  # warm from the incr keys
-    _memo.clear()  # drop scan-path tiers so the adopted frames serve
+    # drop the scan-path tiers so the adopted frames serve; the clear also
+    # releases the warehouse, so rebuild it and re-ingest the arrivals
+    # (untimed) before adopting the corpus-complete root
+    _memo.clear()
+    _noop(QUERIES["incr_token_stats_update_only"](spark, sf_dir))
+    root = _incr._warehouse_for(spark, sf_dir)
     _incr.adopt_token_stats(spark, sf_dir, root)
     _noop(QUERIES["search_bm25_topk"](spark, sf_dir))  # untimed warm-up
     for _rep in range(REPS):

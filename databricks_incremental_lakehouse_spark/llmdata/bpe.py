@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..memo import shared_frame
+from ..memo import once, put, shared_frame
 from .texthash import TOKENIZE_SQL
 from .tokmemo import doc_token_tf
 
@@ -94,34 +94,25 @@ def _merge_pair_col(seq_col: str, pair: str):
     return F.trim(F.replace(replaced, F.lit("  "), F.lit(" ")))
 
 
-# per-(session, sf_dir) cache of the learned merge table (plain python
-# tuples — no JVM handles): the ENCODE side (tokenize_bpe_apply) consumes a
-# frozen trained artifact, so it must not re-pay training per call. The
-# training query itself (vocab_bpe_merges) always runs the full loop — its
-# bench row keeps measuring induction — but seeds this cache on the way out.
-_MERGE_CACHE: dict[tuple, list[tuple]] = {}
+# the learned merge table is cached per session as plain python tuples (no
+# JVM handles): the ENCODE side (tokenize_bpe_apply) consumes a frozen
+# trained artifact, so it must not re-pay training per call. The training
+# query itself (vocab_bpe_merges) always runs the full loop — its bench row
+# keeps measuring induction — but seeds the cache on the way out.
+_MERGES_KEY = "bpe_merges"
 
 
 def learned_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """The merge table as plain rows [(rank, pair, merged, count)],
     trained on first use per (session, sf_dir) and cached thereafter."""
-    from ..memo import _session_key, register_aux_clear
-
-    register_aux_clear(_MERGE_CACHE.clear)
-    key = (_session_key(spark), sf_dir)
-    if key not in _MERGE_CACHE:
-        _MERGE_CACHE[key] = _train_merges(spark, sf_dir)
-    return _MERGE_CACHE[key]
+    return once(spark, (_MERGES_KEY, sf_dir), lambda: _train_merges(spark, sf_dir))
 
 
 def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned BPE merge table after ``BPE_MERGES`` iterations:
     (merge_rank, pair, merged, pair_count)."""
     out_rows = _train_merges(spark, sf_dir)
-    from ..memo import _session_key, register_aux_clear
-
-    register_aux_clear(_MERGE_CACHE.clear)
-    _MERGE_CACHE[(_session_key(spark), sf_dir)] = out_rows
+    put(spark, (_MERGES_KEY, sf_dir), out_rows)
     return spark.createDataFrame(
         out_rows, "merge_rank int, pair string, merged string, pair_count bigint"
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import once, shared_frame
 from ..operators import round_dbl, round_dbl_sql
 from ..tables import load_table
 from .texthash import TOKENIZE_SQL
@@ -236,7 +237,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``text_ccnet_buckets`` consumes it twice per action (tercile bounds +
     the bucket assignment), which un-shared re-ran this whole pipeline
     three times."""
-    from ..memo import shared_frame
 
     def _build() -> DataFrame:
         tok = doc_tokens(spark, sf_dir)
@@ -589,12 +589,6 @@ BM25_QUERIES: dict[int, str] = {
 }
 
 
-# per-(session, sf_dir) cache of the three bounded BM25 corpus statistics
-# (plain python ints/floats/str->int — no JVM handles, so stale-session
-# entries are inert and tiny). Cleared alongside the frame memo.
-_BM25_STATS: dict[tuple, tuple] = {}
-
-
 def _bm25_corpus_stats(
     spark: SparkSession, sf_dir: str
 ) -> tuple[int, float, dict[str, int]]:
@@ -603,32 +597,23 @@ def _bm25_corpus_stats(
     one scalar row plus ≤ |query terms| df rows, both over the persisted
     tf/dl memo frames. F.avg over bigint doc lengths is an exact double
     here (partials < 2^53), matching the oracle's AVG(dl) bit-for-bit."""
-    from ..memo import _session_key
 
-    key = (_session_key(spark), sf_dir)
-    hit = _BM25_STATS.get(key)
-    if hit is not None:
-        return hit
-    srow = doc_lengths(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    ).first()
-    terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    dfs = {
-        r["token"]: int(r["df"])
-        for r in doc_token_tf(spark, sf_dir)
-        .filter(F.col("token").isin(terms))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect()
-    }
-    out = (int(srow["n_docs"]), float(srow["avgdl"]), dfs)
-    _BM25_STATS[key] = out
-    return out
+    def build() -> tuple[int, float, dict[str, int]]:
+        srow = doc_lengths(spark, sf_dir).agg(
+            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+        ).first()
+        terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
+        dfs = {
+            r["token"]: int(r["df"])
+            for r in doc_token_tf(spark, sf_dir)
+            .filter(F.col("token").isin(terms))
+            .groupBy("token")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .collect()
+        }
+        return int(srow["n_docs"]), float(srow["avgdl"]), dfs
 
-
-from ..memo import register_aux_clear as _register_aux_clear  # noqa: E402
-
-_register_aux_clear(_BM25_STATS.clear)
+    return once(spark, ("bm25_stats", sf_dir), build)
 
 
 def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,12 +44,11 @@ is part of the LLM-training-data extension brief.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..memo import once, rmtree
 from ..pinning import pin
 
 from ..operators.layout import read_store_meta, write_store_meta
@@ -75,12 +74,6 @@ from .incrstats import DOC_ARRIVAL_MOD
 # prunes with the new count — no code deploy.
 NUM_INDEX_BUCKETS = 64
 
-# the _CENT_MEMO discipline: lock (concurrent first calls must not build
-# twice) + stale-session eviction (a dead session's entries never pile up)
-_IDX_MEMO: dict[tuple, tuple[str, DataFrame]] = {}
-_IDX_LOCK = threading.Lock()
-
-
 def _bucketed(bands: DataFrame, num_buckets: int = NUM_INDEX_BUCKETS) -> DataFrame:
     return bands.withColumn(
         "bucket", F.pmod(F.xxhash64("band_key"), F.lit(num_buckets))
@@ -105,13 +98,10 @@ def _live_num_buckets(path: str) -> int:
 
 
 def _rm_store_root(path: str) -> None:
-    """Remove a session store's mkdtemp root (the dir ABOVE the parquet
-    dir) — wired into memo clears so no ``dedup_idx_*``/``sem_idx_*``
-    orphans outlive the memo entry that owns them (VERDICT r10 #1). The
-    prefix check means a path that is not one of ours is never touched."""
-    root = os.path.dirname(path.rstrip("/"))
-    if os.path.basename(root).startswith(("dedup_idx_", "sem_idx_", "pair_idx_")):
-        shutil.rmtree(root, ignore_errors=True)
+    """The memo ``release`` of a session store: remove its mkdtemp root
+    (the dir ABOVE the parquet dir), so no ``dedup_idx_*``/``sem_idx_*``/
+    ``pair_idx_*`` dir outlives the entry that owns it (VERDICT r10 #1)."""
+    rmtree(os.path.dirname(path.rstrip("/")))
 
 
 def _dedup_band_index(
@@ -124,59 +114,34 @@ def _dedup_band_index(
     signed; the base corpus is not re-read). Session-memoized per
     ``sf_dir`` so the build is a one-time cost and repeated probes time
     the steady state."""
-    from .. import memo
 
-    # key by (applicationId, startTime), NOT id(spark): a stopped session's
-    # object can be GC'd and its id reused, which would defeat the stale-key
-    # eviction and hand back a store bound to a dead context (ADVICE r10)
-    skey = memo._session_key(spark)
-    # build INSIDE the lock (the _CENT_MEMO discipline, r9 advice on the
-    # PQ memo): two concurrent first calls must not both shingle+sign
-    with _IDX_LOCK:
-        got = _IDX_MEMO.get((skey, sf_dir))
-        if got is None:
-            for stale in [k for k in _IDX_MEMO if k[0] != skey]:
-                _rm_store_root(_IDX_MEMO.pop(stale)[0])
-            docs = load_table(spark, sf_dir, "documents")
-            base = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD != 0)
-            arrivals = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD == 0)
-            path = os.path.join(tempfile.mkdtemp(prefix="dedup_idx_"), "bands")
-            _bucketed(minhash_bands(base)).write.partitionBy("bucket").parquet(
-                path
-            )
-            # ingest: the arrival batch's band rows, pinned (the probe
-            # re-uses them every search) and appended to the store (so
-            # later batches would see these docs as index members too)
-            arr_bands = (
-                _bucketed(minhash_bands(arrivals))
-                .transform(pin)
-            )
-            arr_bands.write.mode("append").partitionBy("bucket").parquet(path)
-            # the probe derives its pruning from this sidecar, so a later
-            # rebucket_store needs no coordination with readers
-            write_store_meta(path, num_buckets=NUM_INDEX_BUCKETS, key_col="band_key")
-            got = (path, arr_bands)
-            _IDX_MEMO[(skey, sf_dir)] = got
-    return got
+    def build() -> tuple[str, DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        base = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD != 0)
+        arrivals = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD == 0)
+        path = os.path.join(tempfile.mkdtemp(prefix="dedup_idx_"), "bands")
+        _bucketed(minhash_bands(base)).write.partitionBy("bucket").parquet(
+            path
+        )
+        # ingest: the arrival batch's band rows, pinned (the probe
+        # re-uses them every search) and appended to the store (so
+        # later batches would see these docs as index members too)
+        arr_bands = (
+            _bucketed(minhash_bands(arrivals))
+            .transform(pin)
+        )
+        arr_bands.write.mode("append").partitionBy("bucket").parquet(path)
+        # the probe derives its pruning from this sidecar, so a later
+        # rebucket_store needs no coordination with readers
+        write_store_meta(path, num_buckets=NUM_INDEX_BUCKETS, key_col="band_key")
+        return path, arr_bands
 
-
-def _clear_idx_memo() -> None:
-    with _IDX_LOCK:
-        for path, _df in _IDX_MEMO.values():
-            _rm_store_root(path)
-        for _cent, path, _df in _SEM_MEMO.values():
-            _rm_store_root(path)
-        for path, _edges, _df in _PAIR_MEMO.values():
-            _rm_store_root(path)
-        _IDX_MEMO.clear()
-        _SEM_MEMO.clear()
-        _PAIR_MEMO.clear()
-        _PAIR_AUX.clear()
-
-
-from .. import memo as _memo  # noqa: E402 — registration, not a cycle
-
-_memo.register_aux_clear(_clear_idx_memo)
+    return once(
+        spark,
+        ("dedup_band_index", sf_dir),
+        build,
+        lambda got: _rm_store_root(got[0]),
+    )
 
 
 def dedup_minhash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,14 +229,6 @@ WHERE doc_a % {DOC_ARRIVAL_MOD} = 0 OR doc_b % {DOC_ARRIVAL_MOD} = 0"""
 
 # --- maintained EXACT-pair index (the shingle inverted index) --------------
 
-# core: (shingle_store_path, exact_edges_path, pinned arrival shingle
-# rows) per (session, sf_dir); aux: (lsh_edges_path, cc_labels_path),
-# built LAZILY on first canonical-selection-family use — the _IDX_MEMO
-# discipline for both
-_PAIR_MEMO: dict[tuple, tuple[str, str, DataFrame]] = {}
-_PAIR_AUX: dict[tuple, tuple[str, str]] = {}
-
-
 def _pair_core(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, DataFrame]:
@@ -298,69 +255,67 @@ def _pair_core(
     the pagerank face never pays for them."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from .. import memo
 
-    skey = memo._session_key(spark)
-    with _IDX_LOCK:
-        got = _PAIR_MEMO.get((skey, sf_dir))
-        if got is None:
-            for stale in [k for k in _PAIR_MEMO if k[0] != skey]:
-                _rm_store_root(_PAIR_MEMO.pop(stale)[0])
-                _PAIR_AUX.pop(stale, None)
-            docs = load_table(spark, sf_dir, "documents")
-            base = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD != 0)
-            arrivals = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD == 0)
-            root = tempfile.mkdtemp(prefix="pair_idx_")
-            sh_path = os.path.join(root, "shingles")
-            edges_path = os.path.join(root, "base_edges")
+    def build() -> tuple[str, str, DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        base = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD != 0)
+        arrivals = docs.filter(F.col("doc_id") % DOC_ARRIVAL_MOD == 0)
+        root = tempfile.mkdtemp(prefix="pair_idx_")
+        sh_path = os.path.join(root, "shingles")
+        edges_path = os.path.join(root, "base_edges")
 
-            def _store_and_edges() -> None:
-                (
-                    _shingles(shingles_ex=_exploded_shingles(base))
-                    .withColumn(
-                        "bucket",
-                        F.pmod(F.xxhash64("shingle"), F.lit(NUM_INDEX_BUCKETS)),
-                    )
-                    .write.partitionBy("bucket")
-                    .parquet(sh_path)
-                )
-                write_store_meta(
-                    sh_path, num_buckets=NUM_INDEX_BUCKETS, key_col="shingle"
-                )
-                stored = spark.read.parquet(sh_path).select(
-                    "doc_id", "shingle", "n_shingles"
-                )
-                # base-base edges: both docs' full shingle sets live in
-                # the base corpus, so this equals the full-corpus pair set
-                # restricted to base pairs — the partition the probe
-                # completes. The stored inverted index already carries
-                # n_shingles, so the jaccard derives directly from it.
-                _jaccard_from_counts(stored).select(
-                    "doc_a", "doc_b"
-                ).write.parquet(edges_path)
-
-            def _arrival_pin() -> DataFrame:
-                return _shingles(
-                    shingles_ex=_exploded_shingles(arrivals)
-                ).transform(pin)
-
-            with ThreadPoolExecutor(2) as ex:
-                f_chain = ex.submit(_store_and_edges)
-                f_arr = ex.submit(_arrival_pin)
-                f_chain.result()
-                arr_sh = f_arr.result()
+        def _store_and_edges() -> None:
             (
-                arr_sh.withColumn(
+                _shingles(shingles_ex=_exploded_shingles(base))
+                .withColumn(
                     "bucket",
                     F.pmod(F.xxhash64("shingle"), F.lit(NUM_INDEX_BUCKETS)),
                 )
-                .write.mode("append")
-                .partitionBy("bucket")
+                .write.partitionBy("bucket")
                 .parquet(sh_path)
             )
-            got = (sh_path, edges_path, arr_sh)
-            _PAIR_MEMO[(skey, sf_dir)] = got
-    return got
+            write_store_meta(
+                sh_path, num_buckets=NUM_INDEX_BUCKETS, key_col="shingle"
+            )
+            stored = spark.read.parquet(sh_path).select(
+                "doc_id", "shingle", "n_shingles"
+            )
+            # base-base edges: both docs' full shingle sets live in
+            # the base corpus, so this equals the full-corpus pair set
+            # restricted to base pairs — the partition the probe
+            # completes. The stored inverted index already carries
+            # n_shingles, so the jaccard derives directly from it.
+            _jaccard_from_counts(stored).select(
+                "doc_a", "doc_b"
+            ).write.parquet(edges_path)
+
+        def _arrival_pin() -> DataFrame:
+            return _shingles(
+                shingles_ex=_exploded_shingles(arrivals)
+            ).transform(pin)
+
+        with ThreadPoolExecutor(2) as ex:
+            f_chain = ex.submit(_store_and_edges)
+            f_arr = ex.submit(_arrival_pin)
+            f_chain.result()
+            arr_sh = f_arr.result()
+        (
+            arr_sh.withColumn(
+                "bucket",
+                F.pmod(F.xxhash64("shingle"), F.lit(NUM_INDEX_BUCKETS)),
+            )
+            .write.mode("append")
+            .partitionBy("bucket")
+            .parquet(sh_path)
+        )
+        return sh_path, edges_path, arr_sh
+
+    return once(
+        spark,
+        ("pair_core", sf_dir),
+        build,
+        lambda got: _rm_store_root(got[0]),
+    )
 
 
 def _pair_lsh_cc(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -384,42 +339,39 @@ def _pair_lsh_cc(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     The stored-shingle read happens after arrivals were appended, but the
     paired-doc semi-join slices to base docs (base pairs have base
     endpoints), so arrival rows cannot enter the base edge derivation."""
-    from .. import memo
-
     sh_path, edges_path, _arr = _pair_core(spark, sf_dir)
-    skey = memo._session_key(spark)
-    with _IDX_LOCK:
-        got = _PAIR_AUX.get((skey, sf_dir))
-        if got is None:
-            root = os.path.dirname(sh_path.rstrip("/"))
-            lsh_path = os.path.join(root, "base_lsh_edges")
-            cc_path = os.path.join(root, "base_cc_labels")
-            stored = spark.read.parquet(sh_path).select("doc_id", "shingle")
-            base_edges = spark.read.parquet(edges_path)
-            paired_docs = (
-                base_edges.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(base_edges.select(F.col("doc_b").alias("doc_id")))
-                .distinct()
-            )
-            ex_paired = stored.join(
-                F.broadcast(paired_docs), "doc_id", "left_semi"
-            )
-            base_edges.join(
-                lsh_band_candidates(shingles_ex=ex_paired),
-                ["doc_a", "doc_b"],
-                "left_semi",
-            ).write.parquet(lsh_path)
-            # settle the base graph's component labels ONCE (read back
-            # from the just-written edges — no pipeline re-run); the
-            # per-batch path merges into these instead of re-looping
-            from .curation import edge_incident_labels
 
-            edge_incident_labels(spark.read.parquet(lsh_path)).write.parquet(
-                cc_path
-            )
-            got = (lsh_path, cc_path)
-            _PAIR_AUX[(skey, sf_dir)] = got
-    return got
+    def build() -> tuple[str, str]:
+        root = os.path.dirname(sh_path.rstrip("/"))
+        lsh_path = os.path.join(root, "base_lsh_edges")
+        cc_path = os.path.join(root, "base_cc_labels")
+        stored = spark.read.parquet(sh_path).select("doc_id", "shingle")
+        base_edges = spark.read.parquet(edges_path)
+        paired_docs = (
+            base_edges.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(base_edges.select(F.col("doc_b").alias("doc_id")))
+            .distinct()
+        )
+        ex_paired = stored.join(
+            F.broadcast(paired_docs), "doc_id", "left_semi"
+        )
+        base_edges.join(
+            lsh_band_candidates(shingles_ex=ex_paired),
+            ["doc_a", "doc_b"],
+            "left_semi",
+        ).write.parquet(lsh_path)
+        # settle the base graph's component labels ONCE (read back
+        # from the just-written edges — no pipeline re-run); the
+        # per-batch path merges into these instead of re-looping
+        from .curation import edge_incident_labels
+
+        edge_incident_labels(spark.read.parquet(lsh_path)).write.parquet(
+            cc_path
+        )
+        return lsh_path, cc_path
+
+    # the paths live under the core entry's root, released with it
+    return once(spark, ("pair_lsh_cc", sf_dir), build)
 
 
 def _exact_pair_index(
@@ -631,11 +583,6 @@ def maintained_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental semantic dedup (embedding face) ---------------------------
 
-# the probed-assignment store of the semantic append index, memoized like
-# the band index above (same lock/eviction discipline)
-_SEM_MEMO: dict[tuple, tuple[list, str, DataFrame]] = {}
-
-
 def _sem_append_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, str, DataFrame]:
@@ -648,32 +595,35 @@ def _sem_append_index(
     cells the batch probes. Arrivals are assigned with the FROZEN codebook
     and appended — O(batch x nlist) ingest, the corpus is never
     re-assigned."""
-    from .. import memo
-    from .similarity import SEMDEDUP_PROBE, _assign_topk, _emb, _ivf_append_index
+    from .similarity import (
+        ARRIVAL_MOD,
+        SEMDEDUP_PROBE,
+        _assign_topk,
+        _emb,
+        _ivf_append_index,
+    )
 
-    skey = memo._session_key(spark)  # not id(spark) — see _dedup_band_index
-    with _IDX_LOCK:
-        got = _SEM_MEMO.get((skey, sf_dir))
-        if got is None:
-            from .similarity import ARRIVAL_MOD
+    def build() -> tuple[list, str, DataFrame]:
+        emb = _emb(spark, sf_dir)
+        base = emb.filter(F.col("vec_id") % ARRIVAL_MOD != 0)
+        arrivals = emb.filter(F.col("vec_id") % ARRIVAL_MOD == 0)
+        cent_rows, _path, _nlist = _ivf_append_index(spark, sf_dir)
+        path = os.path.join(tempfile.mkdtemp(prefix="sem_idx_"), "probes")
+        _assign_topk(base, cent_rows, SEMDEDUP_PROBE).write.partitionBy(
+            "cl"
+        ).parquet(path)
+        arr_probes = _assign_topk(
+            arrivals, cent_rows, SEMDEDUP_PROBE
+        ).transform(pin)
+        arr_probes.write.mode("append").partitionBy("cl").parquet(path)
+        return cent_rows, path, arr_probes
 
-            for stale in [k for k in _SEM_MEMO if k[0] != skey]:
-                _rm_store_root(_SEM_MEMO.pop(stale)[1])
-            emb = _emb(spark, sf_dir)
-            base = emb.filter(F.col("vec_id") % ARRIVAL_MOD != 0)
-            arrivals = emb.filter(F.col("vec_id") % ARRIVAL_MOD == 0)
-            cent_rows, _path, _nlist = _ivf_append_index(spark, sf_dir)
-            path = os.path.join(tempfile.mkdtemp(prefix="sem_idx_"), "probes")
-            _assign_topk(base, cent_rows, SEMDEDUP_PROBE).write.partitionBy(
-                "cl"
-            ).parquet(path)
-            arr_probes = _assign_topk(
-                arrivals, cent_rows, SEMDEDUP_PROBE
-            ).transform(pin)
-            arr_probes.write.mode("append").partitionBy("cl").parquet(path)
-            got = (cent_rows, path, arr_probes)
-            _SEM_MEMO[(skey, sf_dir)] = got
-    return got
+    return once(
+        spark,
+        ("sem_append_index", sf_dir),
+        build,
+        lambda got: _rm_store_root(got[1]),
+    )
 
 
 def dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:

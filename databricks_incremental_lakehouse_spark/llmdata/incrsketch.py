@@ -36,6 +36,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from .. import memo
 from ..pinning import pin
 
 from ..operators.rounding import round_dbl_sql
@@ -56,8 +57,6 @@ from .texthash import hash60_sql
 # initial sketch build (the DOC_ARRIVAL_MOD convention, on events)
 EVENT_ARRIVAL_MOD = 10
 
-_WAREHOUSES: dict[tuple, str] = {}
-_WH_LOCK = threading.Lock()
 # serializes register folds per target root: read-max-merge is NOT atomic
 # (two concurrent folds of different batches each max against only their
 # own batch and the last merge_upsert wins, losing register maxes on
@@ -133,22 +132,18 @@ def hll_registers(spark: SparkSession, root: str) -> DataFrame:
 
 
 def _warehouse_for(spark: SparkSession, sf_dir: str) -> str:
-    from ..memo import _session_key
+    """The session's register warehouse for ``sf_dir``, folded once from
+    the base events; the root is removed with its memo entry."""
 
-    key = (_session_key(spark), sf_dir, "hll")
-    # hold the lock ACROSS the build (the _dedup_band_index discipline,
-    # ADVICE r10): two concurrent first calls must not both fold the base
-    # events (duplicate work + one leaked tempdir)
-    with _WH_LOCK:
-        root = _WAREHOUSES.get(key)
-        if root is None:
-            root = tempfile.mkdtemp(prefix="hllsketch_wh_")
-            base = load_table(spark, sf_dir, "events").filter(
-                F.col("event_id") % EVENT_ARRIVAL_MOD != 0
-            )
-            apply_event_batch(spark, root, base)
-            _WAREHOUSES[key] = root
-    return root
+    def build() -> str:
+        root = tempfile.mkdtemp(prefix="hllsketch_wh_")
+        base = load_table(spark, sf_dir, "events").filter(
+            F.col("event_id") % EVENT_ARRIVAL_MOD != 0
+        )
+        apply_event_batch(spark, root, base)
+        return root
+
+    return memo.once(spark, ("hll_warehouse", sf_dir), build, memo.rmtree)
 
 
 def incr_hll_distinct_update_only(

@@ -50,6 +50,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from .. import memo
 from ..pinning import pin
 
 from ..streaming.incremental import (
@@ -122,32 +123,16 @@ def _adopt_if_enabled(spark: SparkSession, sf_dir: str, root: str) -> None:
 # consumer would die with FAILED_READ_FILE.FILE_NOT_EXIST. Invalidation
 # is therefore the CALLEE's job: apply_doc_updates re-seeds the slots for
 # any root it rewrites that this session previously adopted — no call
-# site can forget. Keyed by (session, root); memo.clear() wipes it via
-# the aux-clearer hook so tests that reset the memo reset this too.
-_ADOPTED: dict[tuple, str] = {}  # (session_key, root) -> sf_dir
-_ADOPTED_LOCK = threading.Lock()
-
-
-def _clear_adopted() -> None:
-    with _ADOPTED_LOCK:
-        _ADOPTED.clear()
-
-
+# site can forget. Recorded as a memo entry keyed by root, so memo.clear()
+# and the stale-session sweep forget it with the frames it seeded.
 def _record_adoption(spark: SparkSession, root: str, sf_dir: str) -> None:
-    from .. import memo
-
-    memo.register_aux_clear(_clear_adopted)
-    with _ADOPTED_LOCK:
-        _ADOPTED[(memo._session_key(spark), root)] = sf_dir
+    memo.put(spark, ("adopted", root), sf_dir)
 
 
 def _reseed_if_adopted(spark: SparkSession, root: str) -> None:
     """Re-seed the tokmemo slots if ``root`` was adopted by this session —
     called by every merge path that rewrites the root's files."""
-    from .. import memo
-
-    with _ADOPTED_LOCK:
-        sf_dir = _ADOPTED.get((memo._session_key(spark), root))
+    sf_dir = memo.get(spark, ("adopted", root))
     if sf_dir is not None:
         adopt_token_stats(spark, sf_dir, root)
 
@@ -159,16 +144,23 @@ def _doc_toks(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
 
 
+def _toks_of(docs: DataFrame | None, toks: DataFrame | None) -> DataFrame:
+    if toks is not None:
+        return toks
+    if docs is None:
+        raise ValueError("docs or toks required")
+    return _doc_toks(docs)
+
+
 def _doc_tf(
     docs: DataFrame | None = None, toks: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, token, tf) — the tokmemo ``doc_token_tf`` lineage over an
     arbitrary document frame (NULL text contributes zero rows). ``toks``
     optionally supplies a precomputed/pinned :func:`_doc_toks` frame."""
-    if toks is None:
-        toks = _doc_toks(docs)
     return (
-        toks.select("doc_id", F.explode("toks").alias("token"))
+        _toks_of(docs, toks)
+        .select("doc_id", F.explode("toks").alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -181,10 +173,9 @@ def _doc_bigrams(
     shuffle-free from the token array (the tokmemo ``doc_bigrams``
     lineage, pre-aggregated to the keyed grain the merge table needs).
     Source selection as in :func:`_doc_tf`."""
-    if toks is None:
-        toks = _doc_toks(docs)
     return (
-        toks.filter(F.size("toks") >= 2)
+        _toks_of(docs, toks)
+        .filter(F.size("toks") >= 2)
         .select(
             "doc_id",
             F.explode(
@@ -531,8 +522,6 @@ def adopt_token_stats(spark: SparkSession, sf_dir: str, root: str) -> None:
     root (``apply_doc_updates``, including the CMS cycle's counter-fold
     variant) re-seeds these slots itself, so the frames never dangle over
     unlinked bucket files (VERDICT r12 #1)."""
-    from .. import memo
-
     _record_adoption(spark, root, sf_dir)
     p = _paths(root)
     postings = read_merge_target(spark, p["postings"]).select(
@@ -570,18 +559,12 @@ def adopt_token_stats(spark: SparkSession, sf_dir: str, root: str) -> None:
 
 # --- registry surface -------------------------------------------------------
 
-# one maintained warehouse per (session, sf_dir, kind)
-_WAREHOUSES: dict[tuple, str] = {}
-_WH_LOCK = threading.Lock()
-
-
 def _warehouse_for(spark: SparkSession, sf_dir: str, kind: str = "token") -> str:
-    from ..memo import _session_key
+    """The session's maintained warehouse root for ``sf_dir`` — built
+    once over the base 90% of documents (``kind`` picks the token-stats
+    or curation tables); the root is removed with its memo entry."""
 
-    key = (_session_key(spark), sf_dir, kind)
-    with _WH_LOCK:
-        root = _WAREHOUSES.get(key)
-    if root is None:
+    def build() -> str:
         root = tempfile.mkdtemp(prefix=f"{kind}stats_wh_")
         base = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % DOC_ARRIVAL_MOD != 0
@@ -590,9 +573,9 @@ def _warehouse_for(spark: SparkSession, sf_dir: str, kind: str = "token") -> str
             apply_doc_updates(spark, root, base)
         else:
             apply_curation_docs(spark, root, base)
-        with _WH_LOCK:
-            _WAREHOUSES[key] = root
-    return root
+        return root
+
+    return memo.once(spark, ("stats_warehouse", sf_dir, kind), build, memo.rmtree)
 
 
 def incr_token_stats_update_only(spark: SparkSession, sf_dir: str) -> DataFrame:

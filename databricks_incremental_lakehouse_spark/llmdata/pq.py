@@ -42,8 +42,12 @@ part of the LLM-training-data extension brief.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from .. import memo
 from ..pinning import pin
 
 from ..operators import round_dbl
@@ -151,13 +155,6 @@ def _centroids(assigned_sub: DataFrame) -> list[tuple[int, int, list[float]]]:
     return [(int(r.m), int(r.cl), list(r.cv)) for r in rows]
 
 
-# session-scoped memo: (codebook rows, encoded codes frame) per sf_dir —
-# the _CENT_MEMO discipline: lock (concurrent first calls must not train
-# twice) + stale-session eviction (a dead session's entries never pile up)
-_PQ_MEMO: dict[tuple, tuple[list, DataFrame]] = {}
-_PQ_LOCK = __import__("threading").Lock()
-
-
 def _train_pq(sub: DataFrame) -> tuple[list, DataFrame]:
     """Train the subspace codebooks on ``sub`` (persisted for the
     duration — each Lloyd pass ends in a KSUB*M-row collect) and encode
@@ -187,47 +184,11 @@ def _pq_index_for(spark: SparkSession, sf_dir: str):
     """Train the PQ codebooks (deterministic per-subspace k-means) and
     encode the corpus; memoized per (session, sf_dir) like the coarse
     codebook. Returns (cb_rows, codes) — codes = (vec_id, m, cl)."""
-    from .. import memo
 
     def build():
         return _train_pq(_subvectors(_unit(_emb(spark, sf_dir))))
 
-    if not memo.enabled():
-        return build()
-    skey = memo._session_key(spark)
-    got = _PQ_MEMO.get((skey, sf_dir))
-    if got is not None:
-        return got
-    with _PQ_LOCK:
-        for stale in [k for k in _PQ_MEMO if k[0] != skey]:
-            _PQ_MEMO.pop(stale)
-        got = _PQ_MEMO.get((skey, sf_dir))
-        if got is None:
-            got = build()
-            _PQ_MEMO[(skey, sf_dir)] = got
-    return got
-
-
-def _clear_pq_memo() -> None:
-    import os
-    import shutil
-
-    with _PQ_LOCK:
-        _PQ_MEMO.clear()
-        _PQ_RES_MEMO.clear()
-        for _cb, path in _PQ_APPEND_MEMO.values():
-            # drop the code store's mkdtemp root with its memo entry so no
-            # pq_app_* temp dir orphans (the incrdedup._rm_store_root
-            # discipline, VERDICT r10 #1)
-            root = os.path.dirname(path.rstrip("/"))
-            if os.path.basename(root).startswith("pq_app_"):
-                shutil.rmtree(root, ignore_errors=True)
-        _PQ_APPEND_MEMO.clear()
-
-
-from .. import memo as _memo  # noqa: E402 — registration, not a cycle
-
-_memo.register_aux_clear(_clear_pq_memo)
+    return memo.once(spark, ("pq_index", sf_dir), build)
 
 
 def sim_ivf_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,10 +335,6 @@ def _pq_search(
 # Residual encoding (by_residual=true): the accuracy face at the same bits
 # ---------------------------------------------------------------------------
 
-# session-scoped memo: (anchor rows, codebooks, codes) per sf_dir
-_PQ_RES_MEMO: dict[tuple, tuple[list, list, DataFrame]] = {}
-
-
 def _residual_index_for(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, list, DataFrame]:
@@ -388,7 +345,6 @@ def _residual_index_for(
     variance), so the same KSUB codes quantize a much smaller ball —
     FAISS ``by_residual=true``, the accuracy face at the same 5 bits x 8
     subspaces. Returns (anchor_rows, cb_rows, codes)."""
-    from .. import memo
 
     def build() -> tuple[list, list, DataFrame]:
         emb = _emb(spark, sf_dir)
@@ -421,20 +377,7 @@ def _residual_index_for(
         cb, codes = _train_pq(_subvectors(res))
         return anchor_rows, cb, codes
 
-    if not memo.enabled():
-        return build()
-    skey = memo._session_key(spark)
-    got = _PQ_RES_MEMO.get((skey, sf_dir))
-    if got is not None:
-        return got
-    with _PQ_LOCK:
-        for stale in [k for k in _PQ_RES_MEMO if k[0] != skey]:
-            _PQ_RES_MEMO.pop(stale)
-        got = _PQ_RES_MEMO.get((skey, sf_dir))
-        if got is None:
-            got = build()
-            _PQ_RES_MEMO[(skey, sf_dir)] = got
-    return got
+    return memo.once(spark, ("pq_residual_index", sf_dir), build)
 
 
 def sim_ivf_topk_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,10 +404,6 @@ def sim_ivf_topk_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental PQ maintenance: encode arrivals against FROZEN codebooks
 # ---------------------------------------------------------------------------
 
-# session-scoped memo: one (frozen codebooks, appended code store) per sf_dir
-_PQ_APPEND_MEMO: dict[tuple, tuple[list, str]] = {}
-
-
 def _pq_append_index_for(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
     """Train the PQ codebooks on the 90% base corpus, encode it, then
     INGEST the late-arriving 10% by encoding them against the FROZEN
@@ -474,13 +413,9 @@ def _pq_append_index_for(spark: SparkSession, sf_dir: str) -> tuple[list, DataFr
     cost is one assignment pass over the batch's M subvectors —
     O(batch x KSUB x M), corpus never re-encoded — plus the append write
     (a code row is 3 ints; the appended files are posting-list sized)."""
-    from .. import memo
     from .similarity import ARRIVAL_MOD
 
     def build() -> tuple[list, str]:
-        import os
-        import tempfile
-
         emb = _emb(spark, sf_dir)
         base_sub = _subvectors(
             _unit(emb.filter(F.col("vec_id") % ARRIVAL_MOD != 0))
@@ -494,20 +429,12 @@ def _pq_append_index_for(spark: SparkSession, sf_dir: str) -> tuple[list, DataFr
         _assign_codes(arr_sub, cb).write.mode("append").parquet(path)
         return cb, path
 
-    if not memo.enabled():
-        cb, path = build()
-        return cb, spark.read.parquet(path)
-    skey = memo._session_key(spark)
-    got = _PQ_APPEND_MEMO.get((skey, sf_dir))
-    if got is None:
-        with _PQ_LOCK:
-            got = _PQ_APPEND_MEMO.get((skey, sf_dir))
-            if got is None:
-                for stale in [k for k in _PQ_APPEND_MEMO if k[0] != skey]:
-                    _PQ_APPEND_MEMO.pop(stale)
-                got = build()
-                _PQ_APPEND_MEMO[(skey, sf_dir)] = got
-    cb, path = got
+    cb, path = memo.once(
+        spark,
+        ("pq_append_index", sf_dir),
+        build,
+        lambda got: memo.rmtree(os.path.dirname(got[1].rstrip("/"))),
+    )
     return cb, spark.read.parquet(path)
 
 

@@ -20,8 +20,12 @@ the portable decimal grid (operators/rounding.py) before thresholds/ranks.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from .. import memo
 from ..pinning import pin
 
 from ..operators import round_dbl
@@ -489,85 +493,33 @@ def _kmeans_cells(emb: DataFrame, nlist: int | None = None):
     return cent_rows, _assign_to(emb, cent_rows), nlist
 
 
-# session-scoped memo of the SHARED coarse quantizer per sf_dir (same
-# discipline as memo.shared_frame and the IVF cell store): three registry
-# families train the identical deterministic k-means (IVF search, SemDeDup,
-# hard-negative mining) — on a deployment the codebook is a trained-once
-# artifact, so re-deriving it per query was pure recompute (~2.5s/call at
-# sf0.1, mostly plan compile of the 16x64-literal assignment expressions).
-# Values are bit-identical with or without the memo (training is
-# deterministic); SPARK_GRAFT_LINEAGE_CACHE=0 disables.
-_CENT_MEMO: dict[tuple, tuple[list, DataFrame]] = {}
-# RLock, not Lock: the store builders (_ivf_index / _ivf_append_index /
-# recluster_ivf_store) hold it across their whole check-build-publish so a
-# concurrent memo.clear() can never rmtree a store a just-returned entry
-# points to, and they re-enter it via _kmeans_cells_for (ADVICE r11)
-_CENT_LOCK = __import__("threading").RLock()
-
-
+# the SHARED coarse quantizer per sf_dir is a session memo entry: three
+# registry families train the identical deterministic k-means (IVF search,
+# SemDeDup, hard-negative mining) — on a deployment the codebook is a
+# trained-once artifact, so re-deriving it per query was pure recompute
+# (~2.5s/call at sf0.1, mostly plan compile of the 16x64-literal
+# assignment expressions). Values are bit-identical with or without the
+# memo (training is deterministic).
 def _kmeans_cells_for(spark: SparkSession, sf_dir: str):
     """(cent_rows, cells, nlist) of the corpus at ``sf_dir`` — memoized per
     (session, sf_dir); the assignment frame is persist()-pinned so every
     consumer shares one materialization. Callers training on OTHER frames
     (subsets, scaled corpora) use :func:`_kmeans_cells` directly."""
-    from .. import memo
 
-    emb = _emb(spark, sf_dir)
-    if not memo.enabled():
-        return _kmeans_cells(emb)
-    skey = memo._session_key(spark)
-    got = _CENT_MEMO.get((skey, sf_dir))
-    if got is not None:
-        return got
-    with _CENT_LOCK:
-        for stale in [k for k in _CENT_MEMO if k[0] != skey]:
-            _unpersist_quiet(_CENT_MEMO.pop(stale)[1])
-        got = _CENT_MEMO.get((skey, sf_dir))
-        if got is None:
-            cent_rows, cells, nlist = _kmeans_cells(emb)
-            got = (cent_rows, cells.persist(), nlist)
-            _CENT_MEMO[(skey, sf_dir)] = got
-    return got
+    def build():
+        cent_rows, cells, nlist = _kmeans_cells(_emb(spark, sf_dir))
+        return cent_rows, cells.persist(), nlist
+
+    return memo.once(
+        spark, ("kmeans_cells", sf_dir), build, lambda got: got[1].unpersist()
+    )
 
 
-def _unpersist_quiet(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:  # noqa: BLE001 — context may already be gone
-        pass
-
-
-def _rm_ivf_store_root(path: str) -> None:
-    """Remove a cell store's mkdtemp root — wired into the memo clear so
-    no ``ivf_idx_``/``ivf_app_`` temp dirs orphan past their memo entry
-    (the incrdedup._rm_store_root discipline, VERDICT r10 #1)."""
-    import os
-    import shutil
-
-    root = os.path.dirname(path.rstrip("/"))
-    if os.path.basename(root).startswith(("ivf_idx_", "ivf_app_")):
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _clear_cent_memo() -> None:
-    """memo.clear() hook: release the codebook memo's persisted blocks and
-    the materialized cell stores (dict entry + backing temp dir together,
-    so the dicts never point at deleted dirs)."""
-    with _CENT_LOCK:
-        for _cent, cells, _nlist in _CENT_MEMO.values():
-            _unpersist_quiet(cells)
-        _CENT_MEMO.clear()
-        for _cent, path, _nlist in _IVF_INDEXES.values():
-            _rm_ivf_store_root(path)
-        _IVF_INDEXES.clear()
-        for _cent, path, _nlist in _IVF_APPEND_INDEXES.values():
-            _rm_ivf_store_root(path)
-        _IVF_APPEND_INDEXES.clear()
-
-
-from .. import memo as _memo  # noqa: E402 — registration, not a cycle at import
-
-_memo.register_aux_clear(_clear_cent_memo)
+def _rm_ivf_store_root(got: tuple) -> None:
+    """The memo ``release`` of a cell store entry ``(cent, path, nlist)``:
+    remove the store's mkdtemp root, so no ``ivf_idx_``/``ivf_app_`` temp
+    dir outlives its entry (VERDICT r10 #1)."""
+    memo.rmtree(os.path.dirname(got[1].rstrip("/")))
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,10 +616,6 @@ def _ivf_search(
     )
 
 
-# session-scoped memo: one materialized IVF index per sf_dir
-_IVF_INDEXES: dict[str, tuple[list[tuple[int, list[float]]], str, int]] = {}
-
-
 def _sq8_scale(vcol: str = "v"):
     """Per-vector SQ8 scale on the 9-dp grid — the single definition,
     shared by :func:`embedding_quantize` (audit surface) and the IVF cell
@@ -713,12 +661,12 @@ def _sq8_codes(vcol: str = "v", scale_col: str = "scale"):
 def _ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, list[float]]], str, int]:
-    """Train the coarse quantizer once per sf_dir and materialize the cell
-    assignment as parquet ``partitionBy(cl)`` — each IVF cell is its own
-    partition directory, so a probe touching N_PROBE cells scans only
-    those cells' files (partition pruning is the inverted-list seek of a
-    classical IVF index). Centroids stay as driver-side rows (nlist of
-    them).
+    """Train the coarse quantizer once per session and sf_dir and
+    materialize the cell assignment as parquet ``partitionBy(cl)`` — each
+    IVF cell is its own partition directory, so a probe touching N_PROBE
+    cells scans only those cells' files (partition pruning is the
+    inverted-list seek of a classical IVF index). Centroids stay as
+    driver-side rows (nlist of them).
 
     Each stored row carries BOTH representations of its vector: the full
     ``v`` (read by the exact search and the re-rank) and the SQ8
@@ -726,27 +674,23 @@ def _ivf_index(
     tinyint codes, 4x less scan bandwidth). Parquet is columnar, so each
     search path pays only for the columns it reads; a production layout
     splitting them into two files changes nothing semantically."""
-    with _CENT_LOCK:  # build inside the lock — the _IDX_MEMO discipline
-        got = _IVF_INDEXES.get(sf_dir)
-        if got is None:
-            import os
-            import tempfile
 
-            cent_rows, cells, nlist = _kmeans_cells_for(spark, sf_dir)
-            path = os.path.join(tempfile.mkdtemp(prefix="ivf_idx_"), "cells")
-            (
-                cells.withColumn("scale", _sq8_scale("v"))
-                .withColumn("codes", _sq8_codes("v", "scale"))
-                .write.partitionBy("cl")
-                .parquet(path)
-            )
-            # NOT calibrated: sim_ivf_topk_indexed is a deliberately
-            # unswitched anchor (== from-scratch), so nothing reads this
-            # store's nprobe_mode — calibrating it would be two full-store
-            # passes for a write-only field (r12 review)
-            got = (cent_rows, path, nlist)
-            _IVF_INDEXES[sf_dir] = got
-    return got
+    def build():
+        cent_rows, cells, nlist = _kmeans_cells_for(spark, sf_dir)
+        path = os.path.join(tempfile.mkdtemp(prefix="ivf_idx_"), "cells")
+        (
+            cells.withColumn("scale", _sq8_scale("v"))
+            .withColumn("codes", _sq8_codes("v", "scale"))
+            .write.partitionBy("cl")
+            .parquet(path)
+        )
+        # NOT calibrated: sim_ivf_topk_indexed is a deliberately
+        # unswitched anchor (== from-scratch), so nothing reads this
+        # store's nprobe_mode — calibrating it would be two full-store
+        # passes for a write-only field (r12 review)
+        return cent_rows, path, nlist
+
+    return memo.once(spark, ("ivf_index", sf_dir), build, _rm_ivf_store_root)
 
 
 def sim_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1708,8 +1652,8 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 
 ARRIVAL_MOD = 10  # vec_id % ARRIVAL_MOD == 0 arrive AFTER the index is built
 
-# session-scoped memo: one (frozen codebook, appended cell store) per sf_dir
-_IVF_APPEND_INDEXES: dict[str, tuple[list[tuple[int, list[float]]], str, int]] = {}
+# memo key stem of the session's (frozen codebook, appended cell store)
+_IVF_APPEND = "ivf_append_index"
 
 
 def _ivf_append_index(
@@ -1724,13 +1668,8 @@ def _ivf_append_index(
     rebuild, no rewrite of existing files; periodic re-training is a
     separate offline job). Ingest cost is one assignment pass over the
     batch — O(batch x nlist) — plus the append write."""
-    with _CENT_LOCK:  # see _ivf_index — guards clear()'s rmtree too
-        got = _IVF_APPEND_INDEXES.get(sf_dir)
-        if got is not None:
-            return got
-        import os
-        import tempfile
 
+    def build():
         emb = _emb(spark, sf_dir)
         base = emb.filter(F.col("vec_id") % ARRIVAL_MOD != 0)
         arrivals = emb.filter(F.col("vec_id") % ARRIVAL_MOD == 0)
@@ -1761,9 +1700,9 @@ def _ivf_append_index(
 
         write_store_meta(path, trained_rows=int(trained), nlist=int(nlist))
         _calibrate_store_nprobe(spark, path, cent_rows, nlist)
-        got = (cent_rows, path, nlist)
-        _IVF_APPEND_INDEXES[sf_dir] = got
-    return got
+        return cent_rows, path, nlist
+
+    return memo.once(spark, (_IVF_APPEND, sf_dir), build, _rm_ivf_store_root)
 
 
 def sim_ivf_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1808,16 +1747,12 @@ def recluster_ivf_store(
     rebuilt from scratch by the next session's ``_ivf_append_index``;
     durable stores get ``_recover_swaps`` self-healing on every
     ``read_store_meta`` probe instead (operators/layout.py)."""
-    import os
     import shutil
 
+    from ..operators.layout import write_store_meta
     from ..streaming.incremental import _swap_dir
 
-    # hold the memo lock across read-retrain-swap-publish: a concurrent
-    # memo.clear() must not rmtree the store mid-rebuild, and two
-    # concurrent reclusters must not race the swap (ADVICE r11; RLock, so
-    # the nested _kmeans_cells_for acquisition is fine)
-    with _CENT_LOCK:
+    def rebuild():
         cent_rows, path, _old_nlist = _ivf_append_index(spark, sf_dir)
         new_cent, cells, nlist = _kmeans_cells_for(spark, sf_dir)
         staging = path.rstrip("/") + "._recluster"
@@ -1830,8 +1765,6 @@ def recluster_ivf_store(
             .parquet(staging)
         )
         _swap_dir(staging, path)
-        from ..operators.layout import write_store_meta
-
         # the recluster trained on the FULL current corpus, so the
         # maintenance policy's arrival fraction resets to zero here
         write_store_meta(
@@ -1842,9 +1775,12 @@ def recluster_ivf_store(
         # re-measure with the retrained codebook: the recluster can move
         # a store into (or out of) the sqrt regime
         _calibrate_store_nprobe(spark, path, new_cent, nlist)
-        got = (new_cent, path, nlist)
-        _IVF_APPEND_INDEXES[sf_dir] = got
-    return got
+        return new_cent, path, nlist
+
+    # the entry's build lock is held across read-retrain-swap-publish: a
+    # concurrent memo.clear() must not rmtree the store mid-rebuild, and
+    # two concurrent reclusters must not race the swap (ADVICE r11)
+    return memo.update(spark, (_IVF_APPEND, sf_dir), rebuild)
 
 
 # train on the base subset (e), assign EVERYTHING (eall) to the frozen

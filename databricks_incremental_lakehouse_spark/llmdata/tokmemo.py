@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..memo import shared_frame
+from ..memo import once, shared_frame
 from ..tables import load_table
 from .texthash import tokenize
 
@@ -120,19 +120,14 @@ def token_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# per-(session, sf_dir) corpus row count — a plain int (no JVM handle), the
-# scalar every idf/normalization formula inlines as a literal
-_N_DOCS: dict[tuple, int] = {}
-
-
 def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
-    from ..memo import _session_key, register_aux_clear
-
-    register_aux_clear(_N_DOCS.clear)
-    key = (_session_key(spark), sf_dir)
-    if key not in _N_DOCS:
-        _N_DOCS[key] = load_table(spark, sf_dir, "documents").count()
-    return _N_DOCS[key]
+    """The corpus row count — a plain int, the scalar every
+    idf/normalization formula inlines as a literal; once per session."""
+    return once(
+        spark,
+        ("llm_n_docs", sf_dir),
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:

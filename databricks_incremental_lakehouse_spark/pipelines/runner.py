@@ -226,7 +226,6 @@ def _run_dag(
             del pending[n]
 
     weights = weights or {}
-    done = {name: threading.Event() for name in stages}
     # serializes the ready-check + start so co-ready stages start in
     # weight order; held only around bookkeeping, never around stage work
     lock = threading.Lock()
@@ -277,7 +276,6 @@ def _run_dag(
                 finished.add(name)
                 started.add(name)  # defensive: never strand co-ready peers
                 cv.notify_all()
-            done[name].set()
 
     with ThreadPoolExecutor(max_workers=max(1, len(stages))) as ex:
         futures = [

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .pinning import PIN_MODE_ENV, pin_mode
+
 # Conf that must be applied to *any* session running this engine, including a
 # driver-provided one. All of these are runtime-settable SQL confs.
 RUNTIME_CONFS: dict[str, str] = {
@@ -37,6 +39,15 @@ RUNTIME_CONFS: dict[str, str] = {
     # columnar warehouse). Only fires where no filter/column transform
     # intervenes, so analytical plans are untouched.
     "spark.sql.parquet.aggregatePushdown": "true",
+}
+
+
+# SPARK_GRAFT_STATESTORE values -> streaming state-store provider class
+_STATE_STORES = {
+    "hdfs": "org.apache.spark.sql.execution.streaming.state."
+    "HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider",
 }
 
 
@@ -68,6 +79,19 @@ def build_spark(
     enough to avoid tiny-task overhead at test SF, and AQE coalesces further;
     on a real cluster this would be sized to ~128 MB per shuffle partition.
     """
+    # dials are checked before any JVM starts, so a bad value fails here
+    # with a named error instead of at first use
+    store = os.environ.get("SPARK_GRAFT_STATESTORE", "hdfs")
+    if store not in _STATE_STORES:
+        raise ValueError(
+            f"SPARK_GRAFT_STATESTORE={store!r} is not one of {tuple(_STATE_STORES)}"
+        )
+    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if pin_mode() == "checkpoint" and not ckpt_dir:
+        raise ValueError(
+            f"{PIN_MODE_ENV}=checkpoint needs SPARK_GRAFT_CHECKPOINT_DIR "
+            "(the reliable-checkpoint directory)"
+        )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
@@ -119,15 +143,7 @@ def build_spark(
         # real deployment with large/long-lived state (multi-GB dedup
         # horizons), RocksDB bounds executor memory instead of OOMing:
         # flip SPARK_GRAFT_STATESTORE=rocksdb there.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            {
-                "hdfs": "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
-                "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            }[os.environ.get("SPARK_GRAFT_STATESTORE", "hdfs")],
-        )
+        .config("spark.sql.streaming.stateStore.providerClass", _STATE_STORES[store])
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
@@ -135,7 +151,6 @@ def build_spark(
     # reliable-checkpoint storage for the pin dial (pinning.py):
     # SPARK_GRAFT_PIN=checkpoint routes every lineage pin through
     # sc.checkpoint, which needs a (cluster-visible) directory.
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir:
         spark.sparkContext.setCheckpointDir(ckpt_dir)
     return apply_runtime_confs(spark)

@@ -16,7 +16,7 @@ attribution join ("which views converted"). Three faces of one relation:
   drained output EQUALS the batch join row-for-row (asserted in
   tests/test_streaming.py and by the shared driver oracle).
 - :func:`stream_view_purchase_join` — the registry query that drains the
-  stream (availableNow, memoized per sf_dir) and serves the result, so
+  stream (availableNow, once per session) and serves the result, so
   the stream-stream path itself gets a driver CORRECTNESS row instead of
   a pytest-only check.
 
@@ -28,14 +28,11 @@ single hash join DuckDB runs for the oracle.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
+from .tuning import copy_events, drain_once
 
 JOIN_BOUND_MIN = 30  # purchase within [view.ts, view.ts + 30 minutes]
 
@@ -145,38 +142,18 @@ def view_purchase_join_stream(
     )
 
 
-# session-scoped memo: one drained join per (sf_dir, how)
-_JOIN_TARGETS: dict[tuple[str, str], str] = {}
-
-
 def _drained_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
-    """Drain the stream-stream join over the events table and serve the
-    appended sink (the stateful.stream_user_totals drain discipline:
-    raise on timeout, memoize only after a confirmed drain)."""
-    target = _JOIN_TARGETS.get((sf_dir, how))
-    if target is None:
-        root = tempfile.mkdtemp(prefix="ss_join_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        from .tuning import state_sized_shuffle
-
-        with state_sized_shuffle(spark):
-            q = view_purchase_join_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt"),
-                how=how,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "view_purchase_join_stream did not drain within 300s; "
-                    "refusing to read a partial sink"
-                )
-        target = os.path.join(root, "target")
-        _JOIN_TARGETS[(sf_dir, how)] = target
+    """Drain the stream-stream join over the events table once per
+    (session, sf_dir, how) and serve the appended sink."""
+    target = drain_once(
+        spark,
+        ("view_purchase_join_stream", sf_dir, how),
+        "ss_join_",
+        lambda src, target, ckpt: view_purchase_join_stream(
+            spark, src, target, ckpt, how=how
+        ),
+        copy_events(sf_dir),
+    )
     return spark.read.parquet(target)
 
 

@@ -35,6 +35,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from .. import memo
 from ..pinning import pin
 
 from ..bronze import (
@@ -718,33 +719,18 @@ def incremental_sales_stream(
     )
 
 
-# session-scoped memo: the refresh registry queries share one warehouse per
-# sf_dir (init is the expensive part; the replay batch is idempotent, so
-# each query may re-apply it independently)
-_WAREHOUSES: dict[str, str] = {}
-
-# session-scoped memo of the pinned replay micro-batch per sf_dir. Selecting
-# the batch (a groupBy over all orders + a semi-join back) costs two full
-# source scans — harness bookkeeping, not refresh work. In production the
-# micro-batch ARRIVES (files/CDC feed); re-deriving it per call inflated the
-# steady-state ext.incr_*_update_only numbers by those two scans (VERDICT r5
-# item 4 / r6 task 5), so it is selected once and pinned via localCheckpoint.
-# Keyed by (session, sf_dir) — a localCheckpoint'd frame dies with its
-# session, and serving it to a LATER session in the same process crashes
-# with a null-session NPE (caught by scripts/session_sequence_smoke.py,
-# r13: the only DataFrame cache in the package that lacked the session
-# key). Stale sessions' entries are swept on miss, the memo.py pattern.
-_REPLAY_BATCHES: dict[tuple, DataFrame] = {}
-
-
 def _replay_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..memo import _session_key
+    """The pinned replay micro-batch, selected once per session. Selecting
+    it (a groupBy over all orders + a semi-join back) costs two full
+    source scans — harness bookkeeping, not refresh work. In production
+    the micro-batch ARRIVES (files/CDC feed); re-deriving it per call
+    inflated the steady-state ext.incr_*_update_only numbers by those two
+    scans (VERDICT r5 item 4 / r6 task 5). The pin dies with its session,
+    so serving it to a LATER session would crash with a null-session NPE
+    (caught by scripts/session_sequence_smoke.py) — the memo's session key
+    prevents that."""
 
-    skey = _session_key(spark)
-    upd = _REPLAY_BATCHES.get((skey, sf_dir))
-    if upd is None:
-        for stale in [k for k in _REPLAY_BATCHES if k[0] != skey]:
-            del _REPLAY_BATCHES[stale]
+    def build() -> DataFrame:
         raw = load_table(spark, sf_dir, "orders")
         keys50 = (
             raw.groupBy("o_orderkey")
@@ -753,16 +739,16 @@ def _replay_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(50)
             .select("o_orderkey")
         )
-        upd = raw.join(
-            F.broadcast(keys50), "o_orderkey", "left_semi"
-        ).transform(pin)
-        _REPLAY_BATCHES[(skey, sf_dir)] = upd
-    return upd
+        return raw.join(F.broadcast(keys50), "o_orderkey", "left_semi").transform(
+            pin
+        )
+
+    return memo.once(spark, ("replay_batch", sf_dir), build)
 
 
 def _refreshed_warehouse(spark: SparkSession, sf_dir: str) -> IncrementalWarehouse:
-    """Build (once per sf_dir) the incremental warehouse and push the
-    replay micro-batch through it.
+    """Build (once per session and sf_dir) the incremental warehouse and
+    push the replay micro-batch through it.
 
     The update batch replays 50 existing orders verbatim (every raw image
     of each key, so the keyed dedup resolves exactly as the initial load
@@ -774,11 +760,15 @@ def _refreshed_warehouse(spark: SparkSession, sf_dir: str) -> IncrementalWarehou
     prune — a random-date batch would touch every year partition and most
     months, degenerating to a near-full rewrite. Mutating-update cases
     (values equal a true batch rebuild) are covered in pytest."""
-    root = _WAREHOUSES.get(sf_dir)
-    if root is None:
+
+    def build() -> str:
         root = tempfile.mkdtemp(prefix="incr_wh_")
         init_incremental_warehouse(spark, sf_dir, root)
-        _WAREHOUSES[sf_dir] = root
+        return root
+
+    # the refresh queries share the warehouse (init is the expensive part);
+    # the replay batch is idempotent, so each call may re-apply it
+    root = memo.once(spark, ("refresh_warehouse", sf_dir), build, memo.rmtree)
     return apply_order_updates(
         spark, root, orders_updates=_replay_batch(spark, sf_dir)
     )

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .incremental import merge_upsert, read_merge_target
-from .tuning import state_sized_shuffle
+from .tuning import copy_events, drain_once
 
 TIER_MOD = 4  # distinct tracked-attribute values: tier in {0..3}
 
@@ -385,48 +385,23 @@ def incremental_scd2_stream(
     )
 
 
-# per-sf_dir drained-stream target (the stream_funnel discipline): the
-# drain is a one-time build, repeated registry calls serve the merged table
-_SCD2_STREAM_TARGETS: dict[str, str] = {}
-
-
 def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the streaming SCD2 maintainer over the
     events file (availableNow) and serve the merged dimension history —
     the SAME DuckDB oracle as the batch ``scd2_user_tier_history``
     (second physical shape, identical semantics), so the streaming
     MERGE-maintenance path is driver-checkable, not pytest-only."""
-    import os
-    import shutil
-    import tempfile
-
-    target = _SCD2_STREAM_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="scd2_stream_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        target_path = os.path.join(root, "target")
-        with state_sized_shuffle(spark):
-            q = incremental_scd2_stream(
-                spark, src, target_path, os.path.join(root, "ckpt"), transform=_obs_of
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()  # don't leak an active query holding the state store
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "incremental_scd2_stream did not drain within 300s; "
-                    "refusing to read a partial merge target"
-                )
-        target = target_path
-        _SCD2_STREAM_TARGETS[sf_dir] = target
+    # the drain is a one-time build; repeated registry calls serve the
+    # merged table
+    target = drain_once(
+        spark,
+        ("incremental_scd2_stream", sf_dir),
+        "scd2_stream_",
+        lambda src, target, ckpt: incremental_scd2_stream(
+            spark, src, target, ckpt, transform=_obs_of
+        ),
+        copy_events(sf_dir),
+    )
     return read_merge_target(spark, target).select(*_HISTORY_COLS)
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .incremental import merge_upsert
-from .tuning import state_sized_shuffle
+from .tuning import copy_events, drain_once
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -107,11 +107,6 @@ def stateful_user_totals_stream(
     )
 
 
-# session-scoped memo: one drained stream per sf_dir (the driver and the
-# parametrized registry test both call the query twice)
-_STREAM_TARGETS: dict[str, str] = {}
-
-
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the stateful running-totals stream over the
     ``events`` table (availableNow) and return the merged per-user target.
@@ -123,40 +118,22 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid at the boundary: the stream accumulates each user's sum in
     per-batch pandas folds whose addition order differs from a SQL
     aggregate's (same tolerance the stream-vs-batch test uses)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..operators import round_dbl
     from .incremental import read_merge_target
 
-    target = _STREAM_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="stateful_q_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = stateful_user_totals_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            # ADVICE r4: a timed-out (still-running) drain would read a partial
-            # merge target AND memoize its path, silently serving wrong results
-            # for the rest of the session — raise instead, and memoize only
-            # after a confirmed drain.
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "stateful_user_totals_stream did not drain within 300s; "
-                    "refusing to read a partial merge target"
-                )
-        target = os.path.join(root, "target")
-        _STREAM_TARGETS[sf_dir] = target
+    # drained once per session; the driver and the parametrized registry
+    # test both call the query twice
+    target = drain_once(
+        spark,
+        ("stateful_user_totals_stream", sf_dir),
+        "stateful_q_",
+        lambda src, target, ckpt: stateful_user_totals_stream(
+            spark, src, target, ckpt
+        ),
+        copy_events(sf_dir),
+    )
     return read_merge_target(spark, target).select(
         "user_id",
         "event_count",
@@ -302,9 +279,6 @@ def stateful_funnel_stream(
     )
 
 
-_FUNNEL_TARGETS: dict[str, str] = {}
-
-
 def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the stateful streaming funnel and serve the
     merged per-user target. After the drain the explicit-state fold must
@@ -312,33 +286,15 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``events_funnel``/``events_funnel_aggjoin`` (third physical shape,
     identical semantics), so the custom-stateful ordered-sequence path is
     driver-checkable, not pytest-only."""
-    import os
-    import shutil
-    import tempfile
-
     from .incremental import read_merge_target
 
-    target = _FUNNEL_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="stateful_funnel_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = stateful_funnel_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "stateful_funnel_stream did not drain within 300s; "
-                    "refusing to read a partial merge target"
-                )
-        target = os.path.join(root, "target")
-        _FUNNEL_TARGETS[sf_dir] = target
+    target = drain_once(
+        spark,
+        ("stateful_funnel_stream", sf_dir),
+        "stateful_funnel_",
+        lambda src, target, ckpt: stateful_funnel_stream(spark, src, target, ckpt),
+        copy_events(sf_dir),
+    )
     return read_merge_target(spark, target).select(
         "user_id", "t_view", "t_click", "t_purchase", "reached_step"
     )
@@ -425,43 +381,24 @@ def stateful_retention_stream(
     )
 
 
-_RETENTION_TARGETS: dict[str, str] = {}
-
-
 def stream_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the stateful retention stream, then roll the
     merged per-user (cohort, offsets) images up to the cohort triangle —
     same DuckDB oracle as the batch ``events_retention``."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..operators import round_dbl
     from .incremental import read_merge_target
 
-    target = _RETENTION_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="stateful_ret_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = stateful_retention_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "stateful_retention_stream did not drain within 300s; "
-                    "refusing to read a partial merge target"
-                )
-        target = os.path.join(root, "target")
-        _RETENTION_TARGETS[sf_dir] = target
+    target = drain_once(
+        spark,
+        ("stateful_retention_stream", sf_dir),
+        "stateful_ret_",
+        lambda src, target, ckpt: stateful_retention_stream(
+            spark, src, target, ckpt
+        ),
+        copy_events(sf_dir),
+    )
     per_user = read_merge_target(spark, target).select(
         "user_id",
         F.date_from_unix_date("cohort_day").alias("cohort_day"),

@@ -31,7 +31,7 @@ from ..pinning import pin
 from ..operators import round_dbl
 from ..operators.skew import SKEW_SHARE_THRESHOLD, salted_join, top_key_share
 from ..tables import load_table
-from .tuning import state_sized_shuffle
+from .tuning import drain_once
 
 _EVENTS_ORACLE_VIEW = (
     "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props "
@@ -544,7 +544,6 @@ ATTR_FEED_FILES = 3  # the registry face splits the feed into this many
 # middle batch both consumes prior state and feeds later state, so 3 is
 # the smallest count that exercises every cross-batch role — each extra
 # batch costs ~2 merge rounds on the one-time drain)
-_ATTR_STREAM_TARGETS: dict[str, str] = {}
 
 
 def incremental_attribution_stream(
@@ -654,18 +653,15 @@ def stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     campaign rollup from the credits store. SAME DuckDB oracle as the
     batch ``events_attribution_last_touch`` (second physical shape,
     identical semantics), so the cross-batch stateful path is
-    driver-checked, not pytest-only. The drain is memoized per sf_dir
-    (the stream_funnel discipline); repeated calls read the merge target."""
+    driver-checked, not pytest-only. The drain runs once per session
+    (:func:`.tuning.drain_once`); repeated calls read the merge target."""
     import os
     import shutil
-    import tempfile
     import time as _time
 
     from .incremental import read_merge_target
 
-    target = _ATTR_STREAM_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="attr_stream_")
+    def prepare(root: str) -> str:
         src = os.path.join(root, "src")
         os.makedirs(src)
         ev = load_table(spark, sf_dir, "events").withColumn(
@@ -704,28 +700,19 @@ def stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
             # and batch order IS the monotone-feed contract
             os.utime(dst, (base + i, base + i))
         shutil.rmtree(tmp)
-        credits_path = os.path.join(root, "credits")
-        with state_sized_shuffle(spark):
-            q = incremental_attribution_stream(
-                spark,
-                src,
-                credits_path,
-                os.path.join(root, "clicks"),
-                os.path.join(root, "ckpt"),
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "incremental_attribution_stream did not drain within 300s; "
-                    "refusing to read a partial credits store"
-                )
-        target = credits_path
-        _ATTR_STREAM_TARGETS[sf_dir] = target
+        return src
+
+    def start(src: str, target: str, ckpt: str):
+        clicks = os.path.join(os.path.dirname(target), "clicks")
+        return incremental_attribution_stream(spark, src, target, clicks, ckpt)
+
+    target = drain_once(
+        spark,
+        ("incremental_attribution_stream", sf_dir),
+        "attr_stream_",
+        start,
+        prepare,
+    )
     return (
         read_merge_target(spark, target)
         .groupBy("campaign")

@@ -1,4 +1,4 @@
-"""Streaming drain tuning: state-sized shuffle width.
+"""Streaming drains: state-sized shuffle width and the drained sink.
 
 A stateful streaming query's shuffle-partition count is pinned into its
 checkpoint at the first micro-batch and every state-store partition pays
@@ -15,15 +15,26 @@ checkpoint pins it forever.
 
 ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides (0 disables the
 resize and keeps the session default).
+
+:func:`drain_once` is the registry face of every streaming query: the
+availableNow drain runs once per session into a fresh temp root and its
+sink is then served like a table — the session-local form of the
+Structured Streaming sink/checkpoint model.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from .. import memo
 
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
@@ -52,3 +63,69 @@ def state_sized_shuffle(spark: SparkSession, partitions: int | None = None):
             yield
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+DRAIN_TIMEOUT_S = 300
+
+
+def drain_once(
+    spark: SparkSession,
+    key: tuple,
+    prefix: str,
+    start: Callable[[str, str, str], StreamingQuery],
+    prepare: Callable[[str], str],
+) -> str:
+    """The sink dir of a stream drained once per (session, ``key``).
+
+    ``prepare(root)`` lays the source out under a fresh temp root and
+    returns the source dir; ``start(src, target, ckpt)`` starts the
+    availableNow query, run under :func:`state_sized_shuffle`. A drain
+    that errors or outlives ``DRAIN_TIMEOUT_S`` is stopped (no active
+    query keeps holding the state store), its root removed, and the error
+    raised — a partial sink is never memoized. ``key[0]`` names the
+    stream in the timeout error. The root is removed with the memo entry."""
+
+    def build() -> str:
+        root = tempfile.mkdtemp(prefix=prefix)
+        try:
+            src = prepare(root)
+            target = os.path.join(root, "target")
+            with state_sized_shuffle(spark):
+                q = start(src, target, os.path.join(root, "ckpt"))
+                try:
+                    drained = q.awaitTermination(DRAIN_TIMEOUT_S)
+                except Exception:
+                    q.stop()
+                    raise
+                if not drained:
+                    q.stop()
+                    raise TimeoutError(
+                        f"{key[0]} did not drain within {DRAIN_TIMEOUT_S}s; "
+                        "refusing to read a partial sink"
+                    )
+        except BaseException:
+            memo.rmtree(root)
+            raise
+        return target
+
+    return memo.once(
+        spark, key, build, lambda target: memo.rmtree(os.path.dirname(target))
+    )
+
+
+def copy_events(sf_dir: str, deliveries: int = 1) -> Callable[[str], str]:
+    """A :func:`drain_once` ``prepare`` feeding ``sf_dir``'s events file,
+    ``deliveries`` times over (a redelivery lands in a later batch when
+    the query reads one file per trigger)."""
+
+    def prepare(root: str) -> str:
+        src = os.path.join(root, "src")
+        os.makedirs(src)
+        for i in range(deliveries):
+            shutil.copy(
+                os.path.join(sf_dir, "events.parquet"),
+                os.path.join(src, f"events_{i}.parquet"),
+            )
+        return src
+
+    return prepare

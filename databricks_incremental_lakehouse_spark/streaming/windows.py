@@ -22,16 +22,12 @@ with map-side partial aggregation. Session windows use Spark's native
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import round_dbl
 from ..tables import load_table
-from .tuning import state_sized_shuffle
+from .tuning import copy_events, drain_once
 
 _EVENTS_ORACLE_VIEW = "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events"
 
@@ -216,39 +212,17 @@ def tumbling_hourly_stream(
     )
 
 
-_TUMBLING_TARGETS: dict[str, str] = {}
-
-
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the streaming hourly tumbling aggregation
-    and serve the appended sink (same drain discipline as the session
-    form)."""
-    target = _TUMBLING_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="ss_tumble_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = tumbling_hourly_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "tumbling_hourly_stream did not drain within 300s; "
-                    "refusing to read a partial sink"
-                )
-        target = os.path.join(root, "target")
-        _TUMBLING_TARGETS[sf_dir] = target
+    and serve the appended sink (drained once per session,
+    :func:`.tuning.drain_once`)."""
+    target = drain_once(
+        spark,
+        ("tumbling_hourly_stream", sf_dir),
+        "ss_tumble_",
+        lambda src, target, ckpt: tumbling_hourly_stream(spark, src, target, ckpt),
+        copy_events(sf_dir),
+    )
     return spark.read.parquet(target)
 
 
@@ -287,38 +261,16 @@ def sliding_windows_stream(
     )
 
 
-_SLIDING_TARGETS: dict[str, str] = {}
-
-
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the streaming sliding-window aggregation and
-    serve the appended sink (same drain discipline as the other forms)."""
-    target = _SLIDING_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="ss_slide_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = sliding_windows_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "sliding_windows_stream did not drain within 300s; "
-                    "refusing to read a partial sink"
-                )
-        target = os.path.join(root, "target")
-        _SLIDING_TARGETS[sf_dir] = target
+    serve the appended sink (drained once per session)."""
+    target = drain_once(
+        spark,
+        ("sliding_windows_stream", sf_dir),
+        "ss_slide_",
+        lambda src, target, ckpt: sliding_windows_stream(spark, src, target, ckpt),
+        copy_events(sf_dir),
+    )
     return spark.read.parquet(target)
 
 
@@ -427,40 +379,17 @@ def session_windows_stream(
     )
 
 
-# session-scoped memo: one drained sessionization per sf_dir
-_SESSION_TARGETS: dict[str, str] = {}
-
-
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: drain the streaming sessionization over the events
-    table and serve the appended sink (the joins._drained_join drain
-    discipline: raise on timeout, memoize only after a confirmed drain)."""
-    target = _SESSION_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="ss_session_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        with state_sized_shuffle(spark):
-            q = session_windows_stream(
-                spark, src, os.path.join(root, "target"), os.path.join(root, "ckpt")
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()  # don't leak an active query holding the state store
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "session_windows_stream did not drain within 300s; "
-                    "refusing to read a partial sink"
-                )
-        target = os.path.join(root, "target")
-        _SESSION_TARGETS[sf_dir] = target
+    table and serve the appended sink (drained once per session: a
+    timed-out drain raises and is never memoized)."""
+    target = drain_once(
+        spark,
+        ("session_windows_stream", sf_dir),
+        "ss_session_",
+        lambda src, target, ckpt: session_windows_stream(spark, src, target, ckpt),
+        copy_events(sf_dir),
+    )
     return spark.read.parquet(target)
 
 
@@ -538,10 +467,6 @@ FROM parsed
 GROUP BY event_type"""
 
 
-# per-sf_dir drained-dedup target (stream_funnel discipline)
-_STREAM_DEDUP_TARGETS: dict[str, str] = {}
-
-
 def stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming dedup under AT-LEAST-ONCE delivery: the events
     file is fed TWICE (a full redelivery — the failure mode every
@@ -556,22 +481,10 @@ def stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here the horizon covers the corpus so the collapse is total — the
     operator's contract is exactly-once WITHIN the lateness bound,
     Spark's documented semantics for at-least-once sources)."""
-    import os
-    import shutil
-    import tempfile
 
-    target = _STREAM_DEDUP_TARGETS.get(sf_dir)
-    if target is None:
-        root = tempfile.mkdtemp(prefix="stream_dedup_")
-        src = os.path.join(root, "src")
-        os.makedirs(src)
-        for i in (1, 2):  # the same payload delivered twice
-            shutil.copy(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, f"delivery{i}.parquet"),
-            )
+    def start(src: str, target: str, ckpt: str):
         static = spark.read.parquet(src)
-        stream = (
+        return (
             spark.readStream.schema(static.schema)
             .option("maxFilesPerTrigger", 1)  # redelivery lands in a LATER batch
             .parquet(src)
@@ -580,28 +493,21 @@ def stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts", F.col("ts").cast("timestamp"))
             .withWatermark("ts", "60 days")  # horizon covers the corpus span
             .dropDuplicatesWithinWatermark(["event_id"])
+            .writeStream.format("parquet")
+            .option("path", target)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        target = os.path.join(root, "target")
-        with state_sized_shuffle(spark):
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", target)
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                drained = q.awaitTermination(300)
-            except Exception:
-                q.stop()  # don't leak an active query holding the state store
-                raise
-            if not drained:
-                q.stop()
-                raise TimeoutError(
-                    "stream_dedup_redelivery did not drain within 300s; "
-                    "refusing to read a partial sink"
-                )
-        _STREAM_DEDUP_TARGETS[sf_dir] = target
+
+    # the same payload delivered twice
+    target = drain_once(
+        spark,
+        ("stream_dedup_redelivery", sf_dir),
+        "stream_dedup_",
+        start,
+        copy_events(sf_dir, deliveries=2),
+    )
     return spark.read.parquet(target).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )

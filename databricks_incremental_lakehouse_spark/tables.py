@@ -12,18 +12,10 @@ are normalized exactly once:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import apply_runtime_confs
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -36,8 +28,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    from .constants import SOURCE_TABLES
-
-    return {n: load_table(spark, sf_dir, n) for n in (names or SOURCE_TABLES)}

@@ -51,8 +51,8 @@ def main() -> None:
         # maintained path: build the warehouse, adopt, re-time
         from databricks_incremental_lakehouse_spark.llmdata import incrstats
 
+        memo.clear()  # the warehouse is a memo entry: build it after the clear
         root = incrstats._warehouse_for(spark, sf_dir)
-        memo.clear()
         incrstats.adopt_token_stats(spark, sf_dir, root)
         q(spark, sf_dir).collect()  # warm-up
         maint = []

@@ -14,8 +14,7 @@ from databricks_incremental_lakehouse_spark.registry import ORACLE, QUERIES
 
 def _main_pass_once_keys():
     """The once["once.*"] assignment keys in bench.py source order,
-    excluding the stream drains (process-global memo — not repeatable
-    in-process, deliberately outside ONCE_CHAIN)."""
+    excluding the stream drains (deliberately outside ONCE_CHAIN)."""
     src = open(bench.__file__).read()
     # only the main() body assigns into once[...]; ONCE_CHAIN itself is a
     # list of tuples, so the bracket-assignment pattern can't match it

@@ -176,21 +176,20 @@ def test_text_stats_adopt_mode_flag(spark, sf_correct, monkeypatch):
     monkeypatch.delenv(TEXT_STATS_MODE_ENV, raising=False)
     assert text_stats_mode() == "adopt"
 
-    skey = memo._session_key(spark)
-    slot = (skey, ("llm_token_df", sf_correct))
+    slot = ("llm_token_df", sf_correct)
 
     # scan mode: no adoption side effect
     monkeypatch.setenv(TEXT_STATS_MODE_ENV, "scan")
     memo.clear()
     incr_token_stats_update_only(spark, sf_correct).count()
-    assert slot not in memo._MEMO
+    assert memo.get(spark, slot) is None
     scan_rows = {tuple(r) for r in search_bm25_topk(spark, sf_correct).collect()}
 
     # adopt mode: the update-only query hands consumers to the warehouse
     monkeypatch.setenv(TEXT_STATS_MODE_ENV, "adopt")
     memo.clear()
     incr_token_stats_update_only(spark, sf_correct).count()
-    assert slot in memo._MEMO
+    assert memo.get(spark, slot) is not None
     try:
         adopted = {
             tuple(r) for r in search_bm25_topk(spark, sf_correct).collect()
@@ -417,6 +416,18 @@ def test_drain_entry_point(spark):
     # idempotent: a second drain applies nothing
     drain_token_stats(spark, root)
     _assert_matches(spark, root, corpus)
+
+
+def test_doc_lineages_need_docs_or_toks():
+    """Neither a document frame nor a token frame is a caller error with a
+    named message, not an AttributeError on None."""
+    import pytest
+
+    from databricks_incremental_lakehouse_spark.llmdata import incrstats as I
+
+    for fn in (I._doc_tf, I._doc_bigrams):
+        with pytest.raises(ValueError, match="docs or toks required"):
+            fn()
 
 
 def test_hll_register_maintenance_idempotent_and_order_free(spark, tmp_path):
@@ -704,7 +715,6 @@ def test_adopted_frames_survive_later_merges(spark, sf_correct):
     try:
         # step 1: the token-stats query adopts (default adopt-mode)
         incr_token_stats_update_only(spark, sf_correct).count()
-        skey = memo._session_key(spark)
         slot_keys = [
             ("llm_tok_tf", sf_correct),
             ("llm_token_df", sf_correct),
@@ -714,8 +724,8 @@ def test_adopted_frames_survive_later_merges(spark, sf_correct):
         ]
         before = {}
         for k in slot_keys:
-            assert (skey, k) in memo._MEMO, f"slot {k[0]} not adopted"
-            before[k] = memo._MEMO[(skey, k)]
+            before[k] = memo.get(spark, k)
+            assert before[k] is not None, f"slot {k[0]} not adopted"
         checks = {k: before[k].count() for k in slot_keys}
 
         # step 2: the CMS cycle re-merges the same arrival batch into the
@@ -727,7 +737,7 @@ def test_adopted_frames_survive_later_merges(spark, sf_correct):
         # step 3: every adopted slot was re-seeded by the callee (fresh
         # object) and reads cleanly with unchanged totals
         for k in slot_keys:
-            frame = memo._MEMO.get((skey, k))
+            frame = memo.get(spark, k)
             assert frame is not None, f"slot {k[0]} dropped, not re-seeded"
             assert frame is not before[k], (
                 f"slot {k[0]} still holds the pre-merge frame"

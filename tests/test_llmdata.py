@@ -1,7 +1,10 @@
 """LLM-data operators: semantics beyond the oracle parity in test_registry."""
 
+import os
+
 from pyspark.sql import functions as F
 
+from databricks_incremental_lakehouse_spark import memo
 from databricks_incremental_lakehouse_spark.llmdata.dedup import (
     MAX_SHINGLE_DF,
     _shingles,
@@ -692,7 +695,6 @@ def test_sim_ivf_indexed_matches_from_scratch(spark, sf_correct):
     IVF results (same centroids, same probes), and the per-sf_dir index
     memo must serve the second call without retraining."""
     from databricks_incremental_lakehouse_spark.llmdata.similarity import (
-        _IVF_INDEXES,
         sim_ivf_topk,
         sim_ivf_topk_indexed,
     )
@@ -700,10 +702,10 @@ def test_sim_ivf_indexed_matches_from_scratch(spark, sf_correct):
     fresh = {tuple(r) for r in sim_ivf_topk(spark, sf_correct).collect()}
     got = {tuple(r) for r in sim_ivf_topk_indexed(spark, sf_correct).collect()}
     assert got == fresh and len(got) > 0
-    path_before = _IVF_INDEXES[sf_correct][1]
+    path_before = memo.get(spark, ("ivf_index", sf_correct))[1]
     again = {tuple(r) for r in sim_ivf_topk_indexed(spark, sf_correct).collect()}
     assert again == fresh
-    assert _IVF_INDEXES[sf_correct][1] == path_before
+    assert memo.get(spark, ("ivf_index", sf_correct))[1] == path_before
 
 
 def test_dedup_embedding_cosine_threshold_matches_numpy(spark, sf_correct):
@@ -1877,13 +1879,12 @@ def test_band_store_lifecycle_rebucket_and_compact(spark, sf_correct):
     assert isinstance(compacted, dict)
 
 
-def test_store_memo_clear_removes_temp_dirs(spark, sf_correct):
-    """VERDICT r10 #1 — no orphaned ``dedup_idx_*``/``sem_idx_*`` (or IVF/
-    PQ append) temp dirs after the memo clear: the stores' backing dirs
-    die with the memo entries that own them."""
-    import os
-
-    from databricks_incremental_lakehouse_spark import memo
+def test_store_memo_clear_removes_temp_dirs(spark, sf_correct, sf_smoke):
+    """VERDICT r10 #1 — no orphaned ``dedup_idx_*``/``sem_idx_*``, IVF/PQ
+    append, maintained-warehouse or drained-sink temp dirs after the memo
+    clear: every store's backing dir dies with the memo entry that owns
+    it."""
+    from databricks_incremental_lakehouse_spark.llmdata import incrsketch, incrstats
     from databricks_incremental_lakehouse_spark.llmdata.incrdedup import (
         _dedup_band_index,
         _sem_append_index,
@@ -1894,12 +1895,27 @@ def test_store_memo_clear_removes_temp_dirs(spark, sf_correct):
     from databricks_incremental_lakehouse_spark.llmdata.similarity import (
         _ivf_append_index,
     )
+    from databricks_incremental_lakehouse_spark.streaming import refresh
+    from databricks_incremental_lakehouse_spark.streaming.windows import (
+        stream_tumbling_hourly,
+    )
 
     band_path, _ = _dedup_band_index(spark, sf_correct)
     _c, sem_path, _a = _sem_append_index(spark, sf_correct)
     _c2, ivf_path, _n = _ivf_append_index(spark, sf_correct)
-    _cb, pq_codes = _pq_append_index_for(spark, sf_correct)
-    roots = [os.path.dirname(p.rstrip("/")) for p in (band_path, sem_path, ivf_path)]
+    _pq_append_index_for(spark, sf_correct)
+    _cb, pq_path = memo.get(spark, ("pq_append_index", sf_correct))
+    stream_tumbling_hourly(spark, sf_smoke)
+    sink = memo.get(spark, ("tumbling_hourly_stream", sf_smoke))
+    refresh._refreshed_warehouse(spark, sf_smoke)
+    roots = [
+        os.path.dirname(p.rstrip("/"))
+        for p in (band_path, sem_path, ivf_path, pq_path, sink)
+    ] + [
+        incrstats._warehouse_for(spark, sf_smoke),
+        incrsketch._warehouse_for(spark, sf_smoke),
+        memo.get(spark, ("refresh_warehouse", sf_smoke)),
+    ]
     for r in roots:
         assert os.path.isdir(r)
     memo.clear()
@@ -2079,8 +2095,7 @@ def test_recluster_ivf_store_equals_full_trained_search(spark, sf_correct):
     between recluster runs is erased. Restores the append-semantics
     index afterwards so later parity tests see the registered contract."""
     from databricks_incremental_lakehouse_spark.llmdata.similarity import (
-        _IVF_APPEND_INDEXES,
-        _rm_ivf_store_root,
+        _IVF_APPEND,
         recluster_ivf_store,
         sim_ivf_append_search,
         sim_ivf_topk,
@@ -2099,8 +2114,9 @@ def test_recluster_ivf_store_equals_full_trained_search(spark, sf_correct):
 
     # restore: drop the reclustered store so the next consumer rebuilds
     # the registered frozen-codebook append index
-    _cent, path, _n = _IVF_APPEND_INDEXES.pop(sf_correct)
-    _rm_ivf_store_root(path)
+    _cent, path, _n = memo.get(spark, (_IVF_APPEND, sf_correct))
+    memo.drop(spark, (_IVF_APPEND, sf_correct))
+    assert not os.path.exists(path)
     restored = rows(sim_ivf_append_search(spark, sf_correct))
     assert restored == before
 
@@ -2194,8 +2210,7 @@ def test_maintenance_recluster_resets_arrival_fraction(spark, sf_correct):
         maintenance_report,
     )
     from databricks_incremental_lakehouse_spark.llmdata.similarity import (
-        _IVF_APPEND_INDEXES,
-        _rm_ivf_store_root,
+        _IVF_APPEND,
         recluster_ivf_store,
     )
 
@@ -2207,8 +2222,7 @@ def test_maintenance_recluster_resets_arrival_fraction(spark, sf_correct):
         }["recluster"]
         assert frac == 0.0
     finally:
-        _cent, path, _n = _IVF_APPEND_INDEXES.pop(sf_correct)
-        _rm_ivf_store_root(path)
+        memo.drop(spark, (_IVF_APPEND, sf_correct))
 
 
 def test_run_due_maintenance_executes_and_clears(spark, sf_smoke):
@@ -2225,10 +2239,7 @@ def test_run_due_maintenance_executes_and_clears(spark, sf_smoke):
         maintenance_report,
         run_due_maintenance,
     )
-    from databricks_incremental_lakehouse_spark.llmdata.similarity import (
-        _IVF_APPEND_INDEXES,
-        _rm_ivf_store_root,
-    )
+    from databricks_incremental_lakehouse_spark.llmdata.similarity import _IVF_APPEND
 
     paths = _store_paths(spark, sf_smoke)
     try:
@@ -2278,9 +2289,7 @@ def test_run_due_maintenance_executes_and_clears(spark, sf_smoke):
         assert second["executed"] == {}
         assert len(second["skipped"]) == 9
     finally:
-        got = _IVF_APPEND_INDEXES.pop(sf_smoke, None)
-        if got is not None:
-            _rm_ivf_store_root(got[1])
+        memo.drop(spark, (_IVF_APPEND, sf_smoke))
 
 
 def test_profile_guided_nprobe_both_regimes(spark, sf_correct):
@@ -2373,9 +2382,7 @@ def test_calibration_sampled_regime_oracle_lockstep(spark, sf_correct):
     orig_max = S.CALIB_SAMPLE_MAX
     try:
         S.CALIB_SAMPLE_MAX = 60
-        got = S._IVF_APPEND_INDEXES.pop(sf_correct, None)
-        if got is not None:
-            S._rm_ivf_store_root(got[1])
+        memo.drop(spark, (S._IVF_APPEND, sf_correct))
         _cent, path, nlist = S._ivf_append_index(spark, sf_correct)
         meta = read_store_meta(path)
         n_store = spark.read.parquet(path).count()
@@ -2390,6 +2397,4 @@ def test_calibration_sampled_regime_oracle_lockstep(spark, sf_correct):
         )
     finally:
         S.CALIB_SAMPLE_MAX = orig_max
-        got = S._IVF_APPEND_INDEXES.pop(sf_correct, None)
-        if got is not None:
-            S._rm_ivf_store_root(got[1])
+        memo.drop(spark, (S._IVF_APPEND, sf_correct))

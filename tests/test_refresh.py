@@ -274,18 +274,23 @@ def test_replay_batch_memo_is_session_scoped(spark, sf_smoke):
     memo must key on session identity like every other DataFrame cache,
     and sweep entries of stopped sessions, or a later session in the same
     process collects a dead plan (null-session NPE)."""
-    from databricks_incremental_lakehouse_spark.memo import _session_key
+    from types import SimpleNamespace
+
+    from databricks_incremental_lakehouse_spark import memo
     from databricks_incremental_lakehouse_spark.streaming import refresh as R
 
+    key = ("replay_batch", sf_smoke)
     upd = R._replay_batch(spark, sf_smoke)
     assert upd.count() > 0
-    skey = _session_key(spark)
-    assert (skey, sf_smoke) in R._REPLAY_BATCHES
-    # every cached entry belongs to the LIVE session (stale swept on miss)
-    assert all(k[0] == skey for k in R._REPLAY_BATCHES)
+    assert memo.get(spark, key) is upd
+    assert R._replay_batch(spark, sf_smoke) is upd
 
     # a foreign session's entry is swept by the next miss, never served
-    R._REPLAY_BATCHES[(("dead-app", 0), sf_smoke)] = upd
-    R._REPLAY_BATCHES.pop((skey, sf_smoke))
-    R._replay_batch(spark, sf_smoke)
-    assert (("dead-app", 0), sf_smoke) not in R._REPLAY_BATCHES
+    dead = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="dead-app", startTime=0)
+    )
+    memo.put(dead, key, upd)
+    assert memo.get(spark, key) is None  # the live entry was swept in turn
+    fresh = R._replay_batch(spark, sf_smoke)
+    assert memo.get(dead, key) is None
+    assert fresh is not upd and memo.get(spark, key) is fresh

@@ -2225,3 +2225,51 @@ def test_admission_gate_covers_audit_probe_pairs(spark, sf_correct, tmp_path):
             if later not in flagged:
                 missed.append((r.doc_a, r.doc_b, later))
     assert not missed, f"gate missed probe-verified pairs: {missed}"
+
+
+def test_drain_once_refuses_a_partial_sink(spark, sf_smoke):
+    """A drain that times out or errors is stopped, its temp root removed
+    and nothing memoized (no later call may serve a partial sink); a good
+    drain runs once per session and its root dies with the memo entry."""
+    from databricks_incremental_lakehouse_spark import memo
+    from databricks_incremental_lakehouse_spark.streaming.tuning import (
+        copy_events,
+        drain_once,
+    )
+
+    class FakeQuery:
+        def __init__(self, outcome):
+            self.outcome, self.stopped = outcome, False
+
+        def awaitTermination(self, timeout):
+            if isinstance(self.outcome, Exception):
+                raise self.outcome
+            return self.outcome
+
+        def stop(self):
+            self.stopped = True
+
+    roots, queries = [], []
+
+    def start_with(outcome):
+        def start(src, target, ckpt):
+            roots.append(os.path.dirname(target))
+            assert os.listdir(src)  # the events copy is in place
+            queries.append(FakeQuery(outcome))
+            return queries[-1]
+
+        return start
+
+    key = ("fake_stream", sf_smoke)
+    for outcome, err in ((False, TimeoutError), (RuntimeError("boom"), RuntimeError)):
+        with pytest.raises(err):
+            drain_once(spark, key, "fake_drain_", start_with(outcome), copy_events(sf_smoke))
+        assert queries[-1].stopped
+        assert not os.path.exists(roots[-1])
+        assert memo.get(spark, key) is None
+
+    target = drain_once(spark, key, "fake_drain_", start_with(True), copy_events(sf_smoke))
+    again = drain_once(spark, key, "fake_drain_", start_with(True), copy_events(sf_smoke))
+    assert again == target and len(queries) == 3
+    memo.drop(spark, key)
+    assert not os.path.exists(roots[-1])
