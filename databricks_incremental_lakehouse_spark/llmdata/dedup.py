@@ -30,8 +30,6 @@ candidate blowup, the standard trick for head-heavy shingle distributions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..pinning import pin
@@ -86,10 +84,10 @@ def _broadcast_embedding_matrix(spark: SparkSession, emb: DataFrame):
     import numpy as np
 
     n = emb.count()
-    limit = int(os.environ.get("SPARK_GRAFT_BASELINE_MAX_ROWS", BASELINE_MAX_ROWS))
-    if n > limit:
+    if n > BASELINE_MAX_ROWS:
         raise ValueError(
-            f"{n} embeddings exceed the quadratic-baseline ceiling ({limit}). "
+            f"{n} embeddings exceed the quadratic-baseline ceiling "
+            f"({BASELINE_MAX_ROWS}). "
             "These queries are O(N^2) verification baselines; at this scale "
             "use the bounded-work paths instead: sim_ivf_topk / "
             "sim_ivf_topk_indexed (IVF ANN), sim_hyperplane_lsh (sign-LSH "

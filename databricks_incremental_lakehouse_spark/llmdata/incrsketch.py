@@ -311,8 +311,8 @@ def incr_cms_heavy_hitters_update_only(
     full-corpus CMS cell for cell."""
     from .incrstats import (
         DOC_ARRIVAL_MOD,
-        _adopt_if_enabled,
         _warehouse_for,
+        adopt_token_stats,
         apply_doc_updates,
     )
 
@@ -335,7 +335,7 @@ def incr_cms_heavy_hitters_update_only(
     # session's text consumers over, same as the token/bigram siblings
     # (apply_doc_updates already re-seeded any PRIOR adoption — this line
     # covers the CMS-runs-first session where no adoption existed yet)
-    _adopt_if_enabled(spark, sf_dir, root)
+    adopt_token_stats(spark, sf_dir, root)
     return cms_heavy_hitters_answer(spark, root)
 
 

@@ -67,52 +67,14 @@ from .texthash import TOKENIZE_SQL, tokenize
 # stats build (the sim_ivf_append_search convention)
 DOC_ARRIVAL_MOD = 10
 
-# --- adopt-mode (VERDICT r9 #4) ---------------------------------------------
+# --- adoption (VERDICT r9 #4) -----------------------------------------------
 # The maintained warehouse beats the scan path where both exist
-# (ext.search_bm25_from_maintained 0.52s vs 0.61s at sf0.1), so adoption
-# is the DEFAULT: whenever a warehouse becomes corpus-complete for its
-# sf_dir (the update-only queries apply the arrival batch, after which
-# the tables equal the full-corpus aggregates — the oracle-checked
-# contract), its reads are seeded into the tokmemo slots and every text
-# consumer answers from the maintained tables. Resolution order mirrors
-# the pipeline config semantics (env override, then configs/{env}.json,
-# then the inline default — reference _context.py:24-42):
-#   1. SPARK_GRAFT_TEXT_STATS = "adopt" | "scan"   (session override)
-#   2. configs/{SPARK_GRAFT_ENV or dev}.json  "text_stats_mode"
-#   3. "adopt"
-TEXT_STATS_MODE_ENV = "SPARK_GRAFT_TEXT_STATS"
-
-
-def text_stats_mode() -> str:
-    """Effective text-statistics serving mode: ``adopt`` (maintained
-    tables serve text consumers once corpus-complete) or ``scan``
-    (tokmemo always derives from the corpus — the pre-r9 behavior)."""
-    env = os.environ.get(TEXT_STATS_MODE_ENV)
-    if env in ("adopt", "scan"):
-        return env
-    import json
-
-    cfg_env = os.environ.get("SPARK_GRAFT_ENV", "dev")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "configs",
-        f"{cfg_env}.json",
-    )
-    try:
-        with open(path) as fh:
-            mode = json.load(fh).get("text_stats_mode")
-        if mode in ("adopt", "scan"):
-            return mode
-    except OSError:
-        pass
-    return "adopt"
-
-
-def _adopt_if_enabled(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Seed the tokmemo slots from ``root`` when adopt-mode is on — called
-    at the moments a warehouse is known corpus-complete for ``sf_dir``."""
-    if text_stats_mode() == "adopt":
-        adopt_token_stats(spark, sf_dir, root)
+# (ext.search_bm25_from_maintained 0.52s vs 0.61s at sf0.1), so whenever
+# a warehouse becomes corpus-complete for its sf_dir (the update-only
+# queries apply the arrival batch, after which the tables equal the
+# full-corpus aggregates — the oracle-checked contract), its reads are
+# seeded into the tokmemo slots (adopt_token_stats) and every text
+# consumer answers from the maintained tables.
 
 
 # --- adopted-root invalidation (VERDICT r12 #1) ------------------------------
@@ -591,9 +553,9 @@ def incr_token_stats_update_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % DOC_ARRIVAL_MOD == 0
     )
     apply_doc_updates(spark, root, arrivals)
-    # the warehouse now covers the full corpus: adopt-mode (default) hands
-    # the session's text consumers over to the maintained tables
-    _adopt_if_enabled(spark, sf_dir, root)
+    # the warehouse now covers the full corpus: hand the session's text
+    # consumers over to the maintained tables
+    adopt_token_stats(spark, sf_dir, root)
     return token_stats(spark, root)
 
 
@@ -620,7 +582,7 @@ def incr_bigram_stats_update_only(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("doc_id") % DOC_ARRIVAL_MOD == 0
     )
     apply_doc_updates(spark, root, arrivals)
-    _adopt_if_enabled(spark, sf_dir, root)
+    adopt_token_stats(spark, sf_dir, root)
     return bigram_stats(spark, root)
 
 

@@ -11,9 +11,8 @@ per (store, job) with the measured signal, the configured threshold, and
 a ``due`` flag. A deployment's scheduler runs exactly the rows where
 ``due`` — the policy is data + config, not prose.
 
-Thresholds resolve like every other deployment knob (the
-``text_stats_mode`` pattern — env override, then ``configs/{env}.json``
-``"maintenance"`` block, then inline defaults):
+Thresholds resolve like the pipeline settings: the ``"maintenance"``
+block of ``configs/{env}.json``, then inline defaults:
 
 - ``rebucket_rows_per_bucket``: a hash-bucketed append store (band index,
   shingle inverted index) is designed so a probe's per-bucket read stays
@@ -46,6 +45,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..config import load_env_config
 from ..operators.layout import (
     STAGING_SUFFIXES as _STAGING_SUFFIXES,
 )
@@ -58,29 +58,12 @@ MAINT_DEFAULTS = {
     "vacuum_debris_dirs": 1,
 }
 
-MAINT_ENV_PREFIX = "SPARK_GRAFT_MAINT_"  # e.g. SPARK_GRAFT_MAINT_REBUCKET_ROWS_PER_BUCKET
-
 
 def maintenance_thresholds() -> dict:
-    """Effective thresholds: per-knob env override, then the
-    ``"maintenance"`` block of ``configs/{SPARK_GRAFT_ENV or dev}.json``,
-    then :data:`MAINT_DEFAULTS` (the text_stats_mode resolution order)."""
-    import json
-
+    """Effective thresholds: the ``"maintenance"`` block of
+    ``configs/{env}.json``, then :data:`MAINT_DEFAULTS`."""
     out = dict(MAINT_DEFAULTS)
-    cfg_env = os.environ.get("SPARK_GRAFT_ENV", "dev")
-    path = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "configs",
-        f"{cfg_env}.json",
-    )
-    try:
-        with open(path) as fh:
-            block = json.load(fh).get("maintenance", {})
-    except (OSError, ValueError):
-        block = {}
+    block = load_env_config().get("maintenance", {})
     # unparsable overrides raise (r12 review): a typo'd operational knob
     # silently reverting to the default is exactly the quiet failure the
     # repo's fail-loud stance exists to prevent (_live_num_buckets)
@@ -90,18 +73,8 @@ def maintenance_thresholds() -> dict:
                 out[k] = type(MAINT_DEFAULTS[k])(block[k])
             except (TypeError, ValueError) as exc:
                 raise ValueError(
-                    f"configs/{cfg_env}.json maintenance.{k}={block[k]!r} "
+                    f"config maintenance.{k}={block[k]!r} "
                     f"is not a valid {type(MAINT_DEFAULTS[k]).__name__}"
-                ) from exc
-    for k in out:
-        env = os.environ.get(MAINT_ENV_PREFIX + k.upper())
-        if env is not None:
-            try:
-                out[k] = type(MAINT_DEFAULTS[k])(env)
-            except ValueError as exc:
-                raise ValueError(
-                    f"{MAINT_ENV_PREFIX + k.upper()}={env!r} is not a "
-                    f"valid {type(MAINT_DEFAULTS[k]).__name__}"
                 ) from exc
     return out
 

@@ -116,9 +116,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 # SQL ``FLOOR(SQRT(n))`` for every count below 2^52 (double sqrt of an int
 # is correctly rounded; the only divergence risk is a half-ulp at magnitudes
 # local parquet never reaches) — so oracle parity holds at every SF with no
-# side channel. ``SPARK_GRAFT_IVF_NLIST`` overrides for experiments; it is
-# read at import and baked into the oracle strings, so parity survives the
-# override.
+# side channel.
 #
 # Recall posture (scripts/ivf_recall_sweep.py): this corpus' embeddings have
 # NO cosine cluster structure (only 4% of exact top-5 neighbors share the
@@ -138,34 +136,24 @@ N_LIST_MAX = 4096  # centroid rows / broadcast aux stay driver-trivial
 N_PROBE_MIN = 10  # recall-swept floor at N_LIST_MIN (10 of 16 cells)
 KMEANS_ITERS = 2  # Lloyd iterations after the deterministic init
 
-_NLIST_ENV = __import__("os").environ.get("SPARK_GRAFT_IVF_NLIST")
-# nprobe override for deployments whose embeddings HAVE cluster structure
-# (r9 verdict #5; measured on real clustered corpora in r11): set to an
-# integer for a fixed width, or to the literal ``sqrt`` for the shipped
-# SUB-LINEAR clustered default nprobe = min(nlist, max(4, 2*ceil(sqrt(
-# nlist)))) — scan fraction ~ 2/sqrt(nlist), decaying as the corpus
-# grows. Data backing (scripts/clustered_recall_sweep.py on the seeded
-# mixture-of-Gaussians corpora, BASELINE.md r11): recall 1.0 at a 4-7%
-# scan fraction at both 1x and 10x, including the frozen-codebook append
-# face — while the driver's structureless corpus re-measures recall ==
-# scanned fraction (0.36/0.46/0.56/0.68/0.94 at 3/7/11/14/28 of 44), so
-# the constant 5/8 fraction stays the default where structure is absent
-# or unknown. Read at import and baked into the oracle params CTE, so
-# parity survives the override.
-_NPROBE_ENV = __import__("os").environ.get("SPARK_GRAFT_IVF_NPROBE")
-
 
 def _nlist_for(n: int) -> int:
     """Cells to train for an ``n``-vector corpus: clamp(isqrt(n))."""
-    if _NLIST_ENV:
-        return int(_NLIST_ENV)
     import math
 
     return max(N_LIST_MIN, min(N_LIST_MAX, math.isqrt(max(int(n), 1))))
 
 
 def _sqrt_nprobe(nlist: int) -> int:
-    """The clustered-corpus sub-linear width: 2*ceil(sqrt(nlist)), floor 4."""
+    """The clustered-corpus sub-linear width: 2*ceil(sqrt(nlist)), floor 4
+    — scan fraction ~ 2/sqrt(nlist), decaying as the corpus grows. Data
+    backing (scripts/clustered_recall_sweep.py on the seeded
+    mixture-of-Gaussians corpora, BASELINE.md r11): recall 1.0 at a 4-7%
+    scan fraction at both 1x and 10x, including the frozen-codebook append
+    face — while the structureless test corpus re-measures recall ==
+    scanned fraction (0.36/0.46/0.56/0.68/0.94 at 3/7/11/14/28 of 44), so
+    only a store whose build-time calibration measures the structure
+    serves it (:func:`_store_nprobe`)."""
     import math
 
     rt = math.isqrt(nlist)
@@ -175,13 +163,7 @@ def _sqrt_nprobe(nlist: int) -> int:
 
 def _nprobe_for(nlist: int) -> int:
     """Search-family probe width: hold the swept 5/8 scan fraction (exact
-    integer arithmetic, mirrored verbatim by the oracle params CTE).
-    ``SPARK_GRAFT_IVF_NPROBE`` overrides for clustered deployments — an
-    integer, or ``sqrt`` for the measured sub-linear clustered default."""
-    if _NPROBE_ENV == "sqrt":
-        return _sqrt_nprobe(nlist)
-    if _NPROBE_ENV:
-        return min(nlist, int(_NPROBE_ENV))
+    integer arithmetic, mirrored verbatim by the oracle params CTE)."""
     return min(nlist, max(N_PROBE_MIN, (nlist * 5 + 7) // 8))
 
 
@@ -190,7 +172,7 @@ def _nprobe_for(nlist: int) -> int:
 # 1.0 at a 4-9% scan fraction (3x serving speedup), while on
 # structureless corpora recall == scan fraction and nothing below 5/8
 # clears the 0.8 lock. Rather than asking the operator to know which
-# regime their embeddings are in (the env dial), each MATERIALIZED store
+# regime their embeddings are in, each MATERIALIZED store
 # measures it at build time: sqrt-width recall against exact top-k on a
 # HELD-OUT probe sample (disjoint from the serving query set), stamped in
 # the store sidecar, and the store self-selects sqrt only when the
@@ -201,8 +183,7 @@ def _nprobe_for(nlist: int) -> int:
 # sf0.01, 0.683 at sf0.1; a leaky sample that included serving query 3
 # measured 0.867 and flipped sf0.01 to sqrt — the r12 review caught it,
 # and the disjoint sample corrected it), the clustered corpora
-# self-select sqrt (recall 1.0). The explicit env dial still wins over
-# the calibration when set, on both engines.
+# self-select sqrt (recall 1.0).
 CALIB_RECALL_MIN = 0.8
 CALIB_QUERY_MOD = 97  # held-out sample: vec_id % 97 == 13 — smallest
 CALIB_QUERY_REM = 13  # member is 13 > the serving query set (vec_id <
@@ -314,24 +295,19 @@ def _calibrate_store_nprobe(
 
 
 def _store_nprobe(nlist: int, path: str) -> int:
-    """Serving width for a materialized store: the explicit env dial wins
-    (operator override, unchanged contract); otherwise the store's own
-    build-time calibration picks sqrt, and an uncalibrated/structureless
-    store keeps the swept 5/8 default."""
+    """Serving width for a materialized store: the store's own build-time
+    calibration picks sqrt, and an uncalibrated/structureless store keeps
+    the swept 5/8 default."""
     from ..operators.layout import read_store_meta
 
-    if _NPROBE_ENV:
-        return _nprobe_for(nlist)
     if read_store_meta(path).get("nprobe_mode") == "sqrt":
         return _sqrt_nprobe(nlist)
     return _nprobe_for(nlist)
 
 
 def _nlist_sql(src: str) -> str:
-    """The nlist formula as a DuckDB scalar expression over table ``src``
-    — the literal env override when set, else clamp(floor(sqrt(count)))."""
-    if _NLIST_ENV:
-        return str(int(_NLIST_ENV))
+    """The nlist formula as a DuckDB scalar expression over table ``src``:
+    clamp(floor(sqrt(count)))."""
     return (
         f"GREATEST({N_LIST_MIN}, LEAST({N_LIST_MAX}, "
         f"CAST(FLOOR(SQRT((SELECT COUNT(*) FROM {src}))) AS INT)))"
@@ -342,20 +318,9 @@ def _params_cte(src: str) -> str:
     """``params(nlist, nprobe)`` — one row; every oracle derives its cell
     count and search probe width from the same corpus-size formula the
     Spark side computes in :func:`_nlist_for` / :func:`_nprobe_for`."""
-    if _NPROBE_ENV == "sqrt":
-        nprobe_sql = (
-            "LEAST(nlist, GREATEST(4, "
-            "2 * CAST(CEIL(SQRT(nlist)) AS INT)))"
-        )
-    elif _NPROBE_ENV:
-        nprobe_sql = f"LEAST(nlist, {int(_NPROBE_ENV)})"
-    else:
-        nprobe_sql = (
-            f"LEAST(nlist, GREATEST({N_PROBE_MIN}, (nlist * 5 + 7) // 8))"
-        )
     return f"""params AS (
     SELECT nlist,
-        {nprobe_sql} AS nprobe
+        LEAST(nlist, GREATEST({N_PROBE_MIN}, (nlist * 5 + 7) // 8)) AS nprobe
     FROM (SELECT {_nlist_sql(src)} AS nlist)
 )"""
 
@@ -1849,8 +1814,7 @@ def sim_ivf_search_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``CALIB_RECALL_MIN`` recall at the sqrt width (clustered corpora:
     recall 1.0 at a 4-9% scan, the measured 3x serving speedup), the
     swept 5/8 fraction otherwise (structureless corpora, where recall
-    tracks scan fraction and nothing narrower clears the bar). The
-    explicit ``SPARK_GRAFT_IVF_NPROBE`` dial still wins when set.
+    tracks scan fraction and nothing narrower clears the bar).
 
     The ORACLE REPLAYS THE POLICY ITSELF: its cparams CTE re-measures
     sqrt-width recall on the same held-out sample with the same rounded
@@ -1876,14 +1840,9 @@ def _calibrated_append_oracle() -> str:
     the rem-13 residue class PROVABLY DISJOINT from the serving query
     set, see the constants at the top of this module; exact vs
     sqrt-width top-k over the store contents, same round-6 grid and
-    tie-breaks). Under the explicit env dial the
-    calibration is bypassed on BOTH engines (cparams passes params
-    through), mirroring :func:`_store_nprobe`."""
+    tie-breaks), mirroring :func:`_store_nprobe`."""
     sqrt_sql = "LEAST(nlist, GREATEST(4, 2 * CAST(CEIL(SQRT(nlist)) AS INT)))"
-    if _NPROBE_ENV:
-        cparams = "cparams AS (SELECT nlist, nprobe FROM params)"
-    else:
-        cparams = f"""calibq AS (
+    cparams = f"""calibq AS (
     SELECT vec_id AS query_id, v AS qv FROM cells
     WHERE vec_id % {CALIB_QUERY_MOD} = {CALIB_QUERY_REM}
     ORDER BY vec_id LIMIT {CALIB_MAX_QUERIES}

@@ -14,8 +14,8 @@ arithmetic (which would overflow-wrap in Spark but error in DuckDB).
 
 Scale note: md5 costs ~3x xxhash64, and every operator here only requires
 *a* stable hash family, not md5 specifically. Production deployments that
-do not need the DuckDB oracle set ``SPARK_GRAFT_FAST_HASH=1`` (or call
-:func:`set_fast_hash`): ``hash60`` then evaluates as
+do not need the DuckDB oracle call :func:`set_fast_hash`: ``hash60`` then
+evaluates as
 ``pmod(xxhash64(s), 2^60)`` — same [0, 2^60) domain, same seed-prefix
 family construction, identical plan shapes — and the registered oracles
 become invalid by design (the driver contract always runs portable).
@@ -23,12 +23,10 @@ become invalid by design (the driver contract always runs portable).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-FAST_HASH = os.environ.get("SPARK_GRAFT_FAST_HASH", "") == "1"
+FAST_HASH = False
 
 
 def set_fast_hash(enabled: bool) -> None:

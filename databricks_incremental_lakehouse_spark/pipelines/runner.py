@@ -21,7 +21,6 @@ target file-count heuristic standing in for Delta's optimizeWrite
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -31,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..bronze import BRONZE_BUILDERS
+from ..config import load_env_config
 from ..constants import AS_OF_DATE, FIXED_BATCH_ID
 from ..gold import (
     vw_customer_lifetime_value,
@@ -71,16 +71,7 @@ class LakehouseConfig:
     ) -> "LakehouseConfig":
         """Load configs/{env}.json with inline fallback (reference
         _context.py:24-42)."""
-        settings = dict(_DEFAULT_CONFIG)
-        if configs_dir is None:
-            configs_dir = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-                "configs",
-            )
-        path = os.path.join(configs_dir, f"{env}.json")
-        if os.path.exists(path):
-            with open(path) as fh:
-                settings.update(json.load(fh))
+        settings = {**_DEFAULT_CONFIG, **load_env_config(env, configs_dir)}
         return cls(sf_dir=sf_dir, warehouse_dir=warehouse_dir, env=env, settings=settings)
 
     def table_path(self, schema: str, table: str) -> str:

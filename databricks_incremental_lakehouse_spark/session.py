@@ -75,9 +75,10 @@ def build_spark(
     """Create (or fetch) a SparkSession tuned for this engine.
 
     ``SPARK_GRAFT_CPUS`` sets local parallelism (default ``*``).
-    ``spark.sql.shuffle.partitions`` defaults to 2x the local cores — small
-    enough to avoid tiny-task overhead at test SF, and AQE coalesces further;
-    on a real cluster this would be sized to ~128 MB per shuffle partition.
+    ``spark.sql.shuffle.partitions`` defaults to a fixed 32, whatever the
+    local core count — small enough to avoid tiny-task overhead at test SF,
+    and AQE coalesces further; on a real cluster this would be sized to
+    ~128 MB per shuffle partition.
     """
     # dials are checked before any JVM starts, so a bad value fails here
     # with a named error instead of at first use

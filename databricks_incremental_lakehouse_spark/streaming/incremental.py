@@ -692,6 +692,7 @@ def merge_upsert(
             # the target's stored bucket count; a wrong set would merge
             # against a partial current image, so only callers that derive
             # the set with _key_bucket over the same columns may use it.
+            # Checked after the staging write, before any swap.
             touched = set(touched_buckets)
         else:
             tsrc = updates.select(BUCKET_COL)
@@ -909,6 +910,22 @@ def merge_upsert(
     merged.repartition(*partition_cols, BUCKET_COL).write.mode(
         "overwrite"
     ).partitionBy(*partition_cols, BUCKET_COL).parquet(staging)
+    # swap exactly the partition dirs the write produced (not the pre-write
+    # collect, whose lineage is recomputed by the write and could diverge
+    # under a nondeterministic source)
+    staged = _leaf_dirs(staging, levels)
+    strays = set() if initial else {_dir_bucket(rel) for rel in staged} - touched
+    if strays:
+        # the touched_buckets contract, enforced from the listing (no Spark
+        # job): a staged bucket whose current image was never read would
+        # replace that bucket with the batch's rows alone
+        shutil.rmtree(staging, ignore_errors=True)
+        if pending_changelog is not None:
+            shutil.rmtree(pending_changelog[0], ignore_errors=True)
+        raise ValueError(
+            f"merge into {target_path} wrote buckets {sorted(strays)} outside "
+            f"touched_buckets {sorted(touched)}"
+        )
     new_schema = updates.drop(BUCKET_COL).schema
     schema_changed = not initial and (
         meta is None
@@ -924,10 +941,6 @@ def merge_upsert(
             target_path, keys, num_buckets, bucket_keys, partition_cols,
             schema=new_schema, staged=True,
         )
-    # swap exactly the partition dirs the write produced (not the pre-write
-    # collect, whose lineage is recomputed by the write and could diverge
-    # under a nondeterministic source)
-    staged = _leaf_dirs(staging, levels)
     if initial:
         if not staged:  # empty initial batch: don't create a file-less target
             shutil.rmtree(staging, ignore_errors=True)

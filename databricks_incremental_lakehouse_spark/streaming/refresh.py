@@ -196,7 +196,7 @@ def init_incremental_warehouse(
     hundred MB — at 100 TB that means thousands of buckets and a 50-key
     merge is O(batch), never O(table). At THIS harness's scale (sf0.1
     tables are ~10-60 MB) the dial inverts: a measured 256-bucket run
-    (scripts/profile_incr.py, r7) tripled the update-only time (6.0 ->
+    (stage profile of the 50-order replay, r7) tripled the update-only time (6.0 ->
     17.3s) because hundreds of tiny files cost more to list/open than the
     full 16-bucket scan they avoid — so the local default stays 16, and
     the recorded attribution (BASELINE.md r7) shows the remaining ~5s

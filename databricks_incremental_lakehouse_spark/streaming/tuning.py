@@ -13,9 +13,6 @@ partitions to expected state volume (~one partition per state-store
 memory budget), independently of the batch shuffle default, because the
 checkpoint pins it forever.
 
-``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides (0 disables the
-resize and keeps the session default).
-
 :func:`drain_once` is the registry face of every streaming query: the
 availableNow drain runs once per session into a fresh temp root and its
 sink is then served like a table — the session-local form of the
@@ -36,9 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import memo
 
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 # conf set/restore is session-global: serialize drain starts so two
 # concurrent drains cannot interleave save/restore
@@ -46,19 +41,15 @@ _CONF_LOCK = threading.RLock()
 
 
 @contextmanager
-def state_sized_shuffle(spark: SparkSession, partitions: int | None = None):
+def state_sized_shuffle(spark: SparkSession):
     """Pin ``spark.sql.shuffle.partitions`` to the state-sized width for
     the duration of a drain (start + awaitTermination), restoring the
     session default after. The width is captured into the query's
     checkpoint at the first batch, so only fresh-checkpoint drains (the
     local pattern) are affected; an existing checkpoint keeps its own."""
-    n = STREAM_STATE_PARTITIONS if partitions is None else int(partitions)
-    if n <= 0:
-        yield
-        return
     with _CONF_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
         try:
             yield
         finally:

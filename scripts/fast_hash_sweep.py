@@ -3,8 +3,8 @@ query that consumes the ``texthash`` hash family (r4 VERDICT item 7).
 
 One session; per query: one untimed warm-up, then REPS timed runs per
 mode, medians reported. The portable family is the driver-contract
-default (DuckDB-replayable); ``SPARK_GRAFT_FAST_HASH=1`` is the
-production path with identical plan shapes. Output: one JSON line with
+default (DuckDB-replayable); ``texthash.set_fast_hash(True)`` selects
+the production path with identical plan shapes. Output: one JSON line with
 ``{query: {"portable": s, "fast": s, "ratio": portable/fast}}``.
 
 Usage: python scripts/fast_hash_sweep.py [sf_dir]

@@ -36,7 +36,7 @@ CONFIGS = [
     # (nlist=44): 10 -> 0.56, 14 (=2*sqrt(44)) -> 0.68, 20 -> 0.84,
     # 22 -> 0.88, 28 (auto 5/8) -> 0.94 — recall == scanned fraction on
     # this structureless corpus, so NO (constant fraction justified;
-    # SPARK_GRAFT_IVF_NPROBE is the dial for clustered deployments).
+    # clustered stores pick the sqrt width by build-time calibration).
     (44, 2, 10), (44, 2, 14), (44, 2, 20), (44, 2, 22),
 ]
 

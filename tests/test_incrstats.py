@@ -158,35 +158,24 @@ def test_adopted_consumers_value_identical(spark, sf_correct):
         memo.clear()
 
 
-def test_text_stats_adopt_mode_flag(spark, sf_correct, monkeypatch):
-    """Adopt-mode is a first-class config (r9 verdict #4): in ``scan``
-    mode the update-only query leaves the tokmemo slots untouched; in
-    ``adopt`` mode (the default — env > configs/{env}.json > inline) it
-    seeds them, and consumers served from the maintained tables answer
-    value-identically."""
+def test_text_stats_adopt_mode_flag(spark, sf_correct):
+    """Adoption (r9 verdict #4): the update-only query seeds the tokmemo
+    slots from the corpus-complete warehouse, and consumers served from
+    the maintained tables answer value-identically to the corpus scan."""
     from databricks_incremental_lakehouse_spark.llmdata.corpusstats import (
         search_bm25_topk,
     )
     from databricks_incremental_lakehouse_spark.llmdata.incrstats import (
-        TEXT_STATS_MODE_ENV,
         incr_token_stats_update_only,
-        text_stats_mode,
     )
-
-    monkeypatch.delenv(TEXT_STATS_MODE_ENV, raising=False)
-    assert text_stats_mode() == "adopt"
 
     slot = ("llm_token_df", sf_correct)
 
-    # scan mode: no adoption side effect
-    monkeypatch.setenv(TEXT_STATS_MODE_ENV, "scan")
+    # scan baseline: a fresh session cache, before any adoption
     memo.clear()
-    incr_token_stats_update_only(spark, sf_correct).count()
-    assert memo.get(spark, slot) is None
     scan_rows = {tuple(r) for r in search_bm25_topk(spark, sf_correct).collect()}
 
-    # adopt mode: the update-only query hands consumers to the warehouse
-    monkeypatch.setenv(TEXT_STATS_MODE_ENV, "adopt")
+    # the update-only query hands consumers to the warehouse
     memo.clear()
     incr_token_stats_update_only(spark, sf_correct).count()
     assert memo.get(spark, slot) is not None

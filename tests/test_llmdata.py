@@ -1007,21 +1007,22 @@ def test_knn_tie_saturation_emits_smallest_id(spark, tmp_path):
 
 
 def test_quadratic_baseline_row_guard(spark, sf_correct, monkeypatch):
-    """Above the configurable ceiling the quadratic baselines must refuse
-    to materialize the matrix and point at the bounded-work scale paths."""
+    """Above the row ceiling the quadratic baselines must refuse to
+    materialize the matrix and point at the bounded-work scale paths."""
     import pytest
 
+    from databricks_incremental_lakehouse_spark.llmdata import dedup
     from databricks_incremental_lakehouse_spark.llmdata.dedup import (
         dedup_embedding_cosine_knn,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_BASELINE_MAX_ROWS", "10")
+    monkeypatch.setattr(dedup, "BASELINE_MAX_ROWS", 10)
     with pytest.raises(ValueError, match="sim_ivf_topk"):
         dedup_embedding_cosine_knn(spark, sf_correct)
 
 
 def test_fast_hash_mode(spark, sf_correct):
-    """SPARK_GRAFT_FAST_HASH swaps the md5 family for xxhash64: the LSH
+    """``texthash.set_fast_hash`` swaps the md5 family for xxhash64: the LSH
     plan must contain xxhash64 (and no md5), a PLANTED exact duplicate must
     share every band key with its original (identical shingles collide
     under ANY hash family), and the exact-dedup canonical count must be
@@ -2121,11 +2122,13 @@ def test_recluster_ivf_store_equals_full_trained_search(spark, sf_correct):
     assert restored == before
 
 
-def test_maintenance_thresholds_resolution(monkeypatch):
-    """Env override > configs/{env}.json block > inline default — the
-    text_stats_mode resolution order, per knob."""
+def test_maintenance_thresholds_resolution(monkeypatch, tmp_path):
+    """configs/{env}.json "maintenance" block > inline default, per knob."""
+    import json
+
     import pytest
 
+    from databricks_incremental_lakehouse_spark import config
     from databricks_incremental_lakehouse_spark.llmdata.maintenance import (
         MAINT_DEFAULTS,
         maintenance_thresholds,
@@ -2141,14 +2144,21 @@ def test_maintenance_thresholds_resolution(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ENV", "prod")
     assert maintenance_thresholds()["compact_files_per_dir"] == 3
 
-    # env layer beats config, with type coercion
-    monkeypatch.setenv("SPARK_GRAFT_MAINT_COMPACT_FILES_PER_DIR", "9")
-    assert maintenance_thresholds()["compact_files_per_dir"] == 9
+    # an env with no config file keeps the inline defaults
+    monkeypatch.setattr(config, "CONFIGS_DIR", str(tmp_path))
+    assert maintenance_thresholds() == MAINT_DEFAULTS
 
-    # unparsable override is LOUD (r12 review): a typo'd operational knob
-    # must not silently revert to the default
-    monkeypatch.setenv("SPARK_GRAFT_MAINT_COMPACT_FILES_PER_DIR", "junk")
-    with pytest.raises(ValueError, match="COMPACT_FILES_PER_DIR"):
+    # config values are type-coerced; an unparsable one is LOUD (r12
+    # review): a typo'd operational knob must not silently revert to the
+    # default
+    (tmp_path / "prod.json").write_text(
+        json.dumps({"maintenance": {"compact_files_per_dir": "9"}})
+    )
+    assert maintenance_thresholds()["compact_files_per_dir"] == 9
+    (tmp_path / "prod.json").write_text(
+        json.dumps({"maintenance": {"compact_files_per_dir": "junk"}})
+    )
+    with pytest.raises(ValueError, match="compact_files_per_dir"):
         maintenance_thresholds()
     assert set(thr) == set(MAINT_DEFAULTS)
 
@@ -2330,14 +2340,6 @@ def test_profile_guided_nprobe_both_regimes(spark, sf_correct):
     assert meta1["nprobe_mode"] == "frac", meta1
     assert meta1["calib_recall_sqrt"] < S.CALIB_RECALL_MIN
     assert S._store_nprobe(nlist1, path1) == S._nprobe_for(nlist1)
-
-    # explicit dial beats calibration (the unchanged operator contract)
-    orig = S._NPROBE_ENV
-    try:
-        S._NPROBE_ENV = "4"
-        assert S._store_nprobe(cnlist, cpath) == min(cnlist, 4)
-    finally:
-        S._NPROBE_ENV = orig
 
     # at the driver's correctness SF the DISJOINT held-out sample
     # measures 0.733 < the bar (a leaky sample including serving query 3

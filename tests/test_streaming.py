@@ -21,6 +21,17 @@ from databricks_incremental_lakehouse_spark.streaming import (
 from databricks_incremental_lakehouse_spark.tables import load_table
 
 
+def _snapshot(root):
+    """Every file under ``root`` -> its bytes."""
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
 def test_merge_upsert_semantics(spark, tmp_path):
     target = str(tmp_path / "t")
     base = spark.createDataFrame(
@@ -40,23 +51,14 @@ def test_merge_upsert_touches_only_updated_partitions(spark, tmp_path):
     that holds no updated key is byte-identical (same path, same bytes) —
     the merge never rewrote it."""
 
-    def snapshot(root):
-        out = {}
-        for dirpath, _dirs, files in os.walk(root):
-            for f in files:
-                p = os.path.join(dirpath, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, root)] = fh.read()
-        return out
-
     target = str(tmp_path / "t")
     base = spark.range(200).selectExpr("id", "CAST(id AS STRING) AS payload")
     merge_upsert(spark, base, target, keys=["id"], num_buckets=8)
-    before = snapshot(target)
+    before = _snapshot(target)
 
     upd = spark.createDataFrame([(7, "updated")], "id long, payload string")
     merge_upsert(spark, upd, target, keys=["id"], num_buckets=8)
-    after = snapshot(target)
+    after = _snapshot(target)
 
     from databricks_incremental_lakehouse_spark.streaming.incremental import BUCKET_COL
 
@@ -226,6 +228,38 @@ def test_watermark_drops_late_events(spark, tmp_path):
 
     ids = {r.event_id for r in read_merge_target(spark, target).collect()}
     assert ids == {1}
+
+
+def test_merge_upsert_rejects_wrong_touched_buckets(spark, tmp_path):
+    """A caller-supplied touched-bucket set that misses a bucket the batch
+    writes raises before any swap: the target and its change feed stay
+    byte-identical instead of that bucket being replaced by the batch's
+    rows alone."""
+    from databricks_incremental_lakehouse_spark.streaming.incremental import BUCKET_COL
+
+    target = str(tmp_path / "t")
+    feed = str(tmp_path / "feed")
+    base = spark.range(200).selectExpr("id", "CAST(id AS STRING) AS payload")
+    merge_upsert(spark, base, target, keys=["id"], num_buckets=8, changelog_dir=feed)
+    before, feed_before = _snapshot(target), _snapshot(feed)
+
+    upd = spark.createDataFrame([(7, "updated")], "id long, payload string")
+    (real,) = {
+        r[0]
+        for r in upd.selectExpr(
+            f"CAST(pmod(xxhash64(id), 8) AS INT) AS {BUCKET_COL}"
+        ).collect()
+    }
+    with pytest.raises(ValueError, match="outside touched_buckets"):
+        merge_upsert(
+            spark, upd, target, keys=["id"], num_buckets=8,
+            changelog_dir=feed, touched_buckets=[(real + 1) % 8],
+        )
+    assert _snapshot(target) == before
+    assert _snapshot(feed) == feed_before
+    assert not os.path.exists(target + "._staging")
+    got = {r.id: r.payload for r in read_merge_target(spark, target).collect()}
+    assert got[7] == "7" and len(got) == 200
 
 
 def test_merge_upsert_empty_updates(spark, tmp_path):
