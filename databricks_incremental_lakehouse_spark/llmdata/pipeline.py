@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 
 from ..pipelines.runner import (
     _gate,
+    _run_dag,
     _run_stage,
-    _run_stages_parallel,
     format_run_summary,
 )
 from ..tables import load_table
@@ -132,8 +132,8 @@ def run_corpus_curation(
             .parquet(report_path)
         )
 
-    _run_stages_parallel(
-        results, {"curated_corpus": _corpus, "gate_report": _report}
+    _run_dag(
+        results, {"curated_corpus": (_corpus, ()), "gate_report": (_report, ())}
     )
     _gate(results, ["curated_corpus", "gate_report"], "curated corpus")
 

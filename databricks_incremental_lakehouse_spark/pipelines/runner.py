@@ -130,37 +130,6 @@ def _run_stage(
     return results[name]
 
 
-def _run_stages_parallel(
-    results: dict,
-    stages: dict,
-    max_retries: int = 0,
-    retry_delay: float = 0.0,
-    max_workers: int = 4,
-) -> None:
-    """Run INDEPENDENT stages concurrently, each under the same
-    :func:`_run_stage` timing/retry capture.
-
-    Spark's scheduler multiplexes concurrently-submitted jobs across the
-    executor pool (a documented multi-thread driver pattern), so a group
-    of small independent writes — the 8 bronze extracts, the silver
-    builds, the gold views — overlaps its per-job fixed costs instead of
-    paying them serially; each stage's tasks still use every core when it
-    is the only one running. The reference's Databricks Workflow runs its
-    child notebooks strictly sequentially (run_sales_analytics.py:69-134)
-    — DAG-level parallelism is free wall-clock it leaves on the table.
-    Stage results land under distinct keys, so concurrent capture is
-    safe; gates still run AFTER the group completes."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
-        futures = [
-            ex.submit(_run_stage, results, name, fn, max_retries, retry_delay)
-            for name, fn in stages.items()
-        ]
-        for f in futures:
-            f.result()
-
-
 def _run_dag(
     results: dict,
     stages: dict,
@@ -170,7 +139,7 @@ def _run_dag(
 ) -> None:
     """Dependency-driven stage scheduler: each stage is ``(fn, deps)`` and
     starts the moment every named dependency has SUCCEEDED — not when its
-    barrier *group* finishes. Versus the grouped runner this removes two
+    barrier *group* finishes. Versus barrier groups this removes two
     false waits on the sales DAG: ``ref_customer_orders`` (needs
     customers/orders/geo) no longer waits for the slow ``ext_lineitem``,
     and ``quality_checks`` (reads bronze + silver only) overlaps the gold

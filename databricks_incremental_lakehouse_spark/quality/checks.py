@@ -424,11 +424,14 @@ def _fused_report(
     the same labeled rows with an ``explode``; the referential-integrity
     anti-joins keep their own branches (they are joins, not per-table
     scalars). Row set identical to the family union — asserted in
-    tests/test_pipeline.py."""
-    now_expr = (
-        F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
-    )
+    tests/test_pipeline.py.
+
+    Freshness aggregates only each table's newest stamp; the lag against
+    ``now`` is taken once, in one projection after the union, so ``now``
+    appears in no per-table aggregate (whose generated code would
+    otherwise differ on every run)."""
     branches = []
+    stamped = []  # tables whose Freshness value is their newest stamp
     for name, df in src.items():
         if df is None:
             continue
@@ -465,15 +468,13 @@ def _fused_report(
                 ),
             ]
         ts_col = "_ingested_at" if name.startswith("bronze.") else "_refined_at"
-        if ts_col not in df.columns:
-            df = df.withColumn(ts_col, now_expr)
-        metrics.append(
-            (
-                "Freshness",
-                name,
-                F.unix_timestamp(now_expr) - F.unix_timestamp(F.max(ts_col)),
-            )
-        )
+        if ts_col in df.columns:
+            metrics.append(("Freshness", name, F.unix_timestamp(F.max(ts_col))))
+            stamped.append(name)
+        else:
+            # an unstamped frame counts as stamped now (lag 0), as in
+            # qc_freshness
+            metrics.append(("Freshness", name, F.lit(0)))
         agged = df.agg(
             *[expr.cast("long").alias(f"_m{i}") for i, (_, _, expr) in enumerate(metrics)]
         )
@@ -498,7 +499,21 @@ def _fused_report(
             "check_type", "check_name", "value"
         )
     )
-    report = reduce(DataFrame.unionAll, branches)
+    now_expr = (
+        F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
+    )
+    # `now` folds to a DECIMAL literal on purpose: generated code inlines
+    # primitive literals (a per-run timestamp would make this stage's
+    # class new on every run) but passes decimal ones in as references,
+    # so the compiled class is reused whatever `now` is
+    now_s = F.unix_timestamp(now_expr).cast("decimal(20,0)")
+    report = reduce(DataFrame.unionAll, branches).withColumn(
+        "value",
+        F.when(
+            (F.col("check_type") == "Freshness") & F.col("check_name").isin(stamped),
+            (now_s - F.col("value")).cast("long"),
+        ).otherwise(F.col("value")),
+    )
     return _status(
         report,
         F.when(F.col("check_type") == "Row Count", F.col("value") > 0)
@@ -515,9 +530,12 @@ def run_all_checks(
     sf_dir: str,
     raise_on_fail: bool = True,
     sources: dict[str, DataFrame] | None = None,
+    now: str | None = None,
 ) -> DataFrame:
     """Run every family; optionally raise on any FAIL (the reference never
     raises — data_quality_checks.py:144 — which we treat as a bug).
+    ``now`` is the freshness reference time (default: wall clock), as in
+    :func:`qc_freshness`.
 
     ``sources``: materialized warehouse tables from the pipeline runner;
     resolved once here so all families share them. The battery executes
@@ -525,7 +543,7 @@ def run_all_checks(
     same labeled rows as the per-family union, a fraction of the scans
     and plan size)."""
     src = qc_sources(spark, sf_dir, sources)
-    report = _fused_report(spark, sf_dir, src)
+    report = _fused_report(spark, sf_dir, src, now)
     # Always execute the report (the reference always displays it —
     # data_quality_checks.py:144); it is ~20 labeled scalar rows.
     failures = [r for r in report.collect() if r.status == "FAIL"]

@@ -39,7 +39,28 @@ RUNTIME_CONFS: dict[str, str] = {
     # columnar warehouse). Only fires where no filter/column transform
     # intervenes, so analytical plans are untouched.
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Name generated classes without their whole-stage-codegen stage id.
+    # Under AQE the ids follow the order in which query stages are planned,
+    # which varies run to run, so the same stage's code got a new class
+    # name — and a generated-code cache miss — on about one run in three.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+# Entries in Spark's generated-code cache (the static conf
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100). The pipelines
+# are fixed plans re-run on every schedule, so plan shapes repeat within a
+# session and a warm re-run can reuse every class it generated before — if
+# the cache holds them. One medallion rebuild (sales + supplier DAGs and the
+# 4 BI reads) compiles ~354 classes, so at 100 entries every warm rebuild
+# recompiled all of them (Janino, then JIT of the new bytecode: 8-23 CPU-s
+# per op on 4 cores). Measured working sets (distinct classes compiled):
+# ~300 for a cold medallion rebuild and ~230 for a token-stats initial load
+# plus its first update (perfbench, seed 1, 4 cores), and 2353-2359 for all
+# 170 registry queries in one session, in either order
+# (scripts/session_sequence_smoke.py at sf0.001). 4096 is the next power of
+# two above the whole registry's set, so no session of this engine evicts.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 # SPARK_GRAFT_STATESTORE values -> streaming state-store provider class
@@ -79,6 +100,16 @@ def build_spark(
     local core count — small enough to avoid tiny-task overhead at test SF,
     and AQE coalesces further; on a real cluster this would be sized to
     ~128 MB per shuffle partition.
+
+    The generated-code cache holds :data:`CODEGEN_CACHE_ENTRIES` classes
+    (Spark's default: 100). It relies on plan shapes repeating within a
+    session — a warm pipeline re-run then compiles only the stages whose
+    code embeds a per-run literal (the audit stamps). The cost is the
+    cached classes' memory: traced perfbench peak RSS went 1552-1641 ->
+    1579-1681 MiB on medallion_rebuild and 2124 -> 1914 MiB on
+    corpus_stats_fold (4 cores, 2 GiB heap). The conf is static, so it takes effect only for a
+    session this function starts: a driver-supplied session (the
+    :func:`apply_runtime_confs` path) keeps Spark's 100-entry default.
     """
     # dials are checked before any JVM starts, so a bad value fails here
     # with a named error instead of at first use
@@ -103,6 +134,7 @@ def build_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Arrow for the (few) Pandas-UDF paths in llmdata.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -155,3 +187,11 @@ def build_spark(
     if ckpt_dir:
         spark.sparkContext.setCheckpointDir(ckpt_dir)
     return apply_runtime_confs(spark)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far (every
+    cache miss of the generated-code cache compiles one); the difference
+    across a run is that run's compile count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -39,6 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructField, StructType
 from ..pinning import pin
 
 from ..operators import dedup_latest
@@ -82,8 +83,6 @@ def _nullable_schema(schema):
     declares it non-nullable (e.g. a lit()-derived update column) would let
     the optimizer exploit a false IsNotNull assertion and silently drop or
     mis-simplify rows. Every pinned/explicit schema goes through here."""
-    from pyspark.sql.types import StructField, StructType
-
     return StructType(
         [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
     )
@@ -285,8 +284,6 @@ def read_merge_target(spark: SparkSession, target_path: str) -> DataFrame:
     read (``mergeSchema``)."""
     meta = _read_meta(target_path)
     if meta is not None and meta.get("schema"):
-        from pyspark.sql.types import StructType
-
         # forced nullable (covers sidecars pinned before the rule): files
         # from buckets untouched since an evolution backfill NULL into the
         # new column, so a non-null declaration would be a lie the
@@ -635,8 +632,6 @@ def merge_upsert(
         # single-footer inference sees only the first-listed file and
         # misses evolved columns living elsewhere (r7 review reproduction).
         if meta is not None and meta.get("schema"):
-            from pyspark.sql.types import StructType
-
             stored_schema = StructType.fromJson(meta["schema"])
         else:
             stored_schema = (
@@ -1115,8 +1110,15 @@ def apply_cdf_delta(
                 .collect()
             }
         )
+        reader = sess.read
+        if meta.get("schema"):
+            # the sidecar's schema spares the footer-inference job; the
+            # bucket partition column is still discovered from the paths
+            reader = reader.schema(
+                _nullable_schema(StructType.fromJson(meta["schema"]))
+            )
         cur0 = (
-            sess.read.parquet(target_path)
+            reader.parquet(target_path)
             .filter(F.col(BUCKET_COL).isin(buckets))
             .drop(BUCKET_COL)
         )

@@ -18,6 +18,14 @@ asserting only that each query builds and collects without raising.
 Pure smoke: no oracle, no value comparison (the sweep owns those), so a
 full 2x170 pass at sf0.001 is cheap relative to one oracle sweep.
 
+Each order's summary also counts Spark's generated-code compiles: the
+total (``codegen_compiles``) and the distinct classes among them
+(``codegen_distinct``, the order's codegen working set). The
+generated-code cache is emptied when an order starts, so distinct is the
+cache's size at the end. The session sizes the cache as ``build_spark``
+does (``CODEGEN_CACHE_ENTRIES``); if an order's working set outgrew it,
+the cache evicted (total > cached) and distinct is reported as null.
+
 Usage:
     python scripts/session_sequence_smoke.py [--sf-dir DIR] [--seed N]
         [--orders window,shuffled] [--out FILE]
@@ -35,11 +43,15 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from databricks_incremental_lakehouse_spark.session import (  # noqa: E402
+    CODEGEN_CACHE_ENTRIES,
+    codegen_compiles,
+)
 
 SF_DIR = os.environ.get("SEQ_SMOKE_SF_DIR", "/root/testdata/sf0.001")
 
@@ -49,6 +61,7 @@ def _build_session() -> SparkSession:
         SparkSession.builder.master("local[8]")
         .appName("session-sequence-smoke")
         .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
@@ -57,6 +70,16 @@ def _build_session() -> SparkSession:
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _codegen_cache(spark: SparkSession):
+    """Spark's generated-code cache (a private field, read by reflection)."""
+    jvm = spark.sparkContext._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    return field.get(None)
 
 
 def run_order(order_name: str, names: list[str], sf_dir: str) -> dict:
@@ -71,6 +94,9 @@ def run_order(order_name: str, names: list[str], sf_dir: str) -> dict:
     queries = entry.queries()
     failures = []
     t_order = time.time()
+    cache = _codegen_cache(spark)
+    cache.invalidateAll()  # the JVM, and its cache, outlive the last order
+    compiles0 = codegen_compiles(spark)
     try:
         for i, name in enumerate(names):
             t0 = time.time()
@@ -100,6 +126,8 @@ def run_order(order_name: str, names: list[str], sf_dir: str) -> dict:
                 ),
                 flush=True,
             )
+        compiles = codegen_compiles(spark) - compiles0
+        cached = int(cache.size())
     finally:
         memo.clear()
         spark.stop()
@@ -109,6 +137,8 @@ def run_order(order_name: str, names: list[str], sf_dir: str) -> dict:
         "n_failures": len(failures),
         "failures": failures,
         "sec": round(time.time() - t_order, 1),
+        "codegen_compiles": compiles,
+        "codegen_distinct": cached if cached == compiles else None,
     }
 
 

@@ -29,6 +29,10 @@ import __spark_entry__ as e
 
 rows = e.entry(spark).collect()
 assert len(rows) >= 0 and len(rows) is not None
+# the generated-code cache size is a static conf: a driver's session keeps
+# Spark's default, while the runtime confs are retrofitted
+assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "100"
+assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
 
 q = e.queries()
 for name in ("events_tumbling_hourly", "bronze_orders", "stream_user_totals"):

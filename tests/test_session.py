@@ -43,3 +43,14 @@ def test_env_dials_are_read_in_one_place():
                 if n in ("environ", "getenv"):
                     offenders.append(f"{path.relative_to(pkg)}:{node.lineno} {n}")
     assert not offenders, offenders
+
+
+def test_build_spark_sizes_the_codegen_cache(spark):
+    """The engine's session holds a rebuild's generated classes (Spark's
+    default keeps 100, fewer than one medallion rebuild compiles)."""
+    from databricks_incremental_lakehouse_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert build_spark() is spark
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
