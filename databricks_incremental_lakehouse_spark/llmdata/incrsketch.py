@@ -285,13 +285,12 @@ def fold_cms_counters(spark: SparkSession, root: str) -> None:
     Delta-CDF multi-consumer shape). Counter algebra is signed sums, so
     this consumer rides the full watermark discipline (two-phase stamp,
     interrupted-fold rebuild) the idempotent HLL face gets to skip."""
-    from .incrstats import _fold_new_commits, _paths
+    from .incrstats import _fold_new_commits
 
-    p = _paths(root)
     _fold_new_commits(
         spark,
         root,
-        p["postings_log"],
+        "postings",
         os.path.join(root, "cms_counters"),
         ["seed", "bucket"],
         ["tf"],

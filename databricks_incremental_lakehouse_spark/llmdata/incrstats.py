@@ -47,7 +47,9 @@ from __future__ import annotations
 import os
 import tempfile
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .. import memo
@@ -55,6 +57,9 @@ from ..pinning import pin
 
 from ..streaming.incremental import (
     _committed_dirs,
+    _key_bucket,
+    _read_meta,
+    _stored_schema,
     apply_cdf_delta,
     merge_upsert,
     read_cdf_totals,
@@ -268,7 +273,7 @@ def _write_applied(root: str, target: str, top: int) -> None:
 def _fold_new_commits(
     spark: SparkSession,
     root: str,
-    log_dir: str,
+    feed: str,
     target: str,
     group_cols: list[str],
     sum_cols: list[str],
@@ -282,9 +287,11 @@ def _fold_new_commits(
     (intent stamp -> apply -> finalize, see ``_APPLIED``): a fold
     interrupted between the stamps is detected here and the aggregate is
     rebuilt from the full feed — derived state, immutable inputs, so the
-    rebuild is deterministic and exact."""
+    rebuild is deterministic and exact. ``feed`` names the merge table
+    (a :func:`_paths` key) whose change feed is folded."""
     import shutil
 
+    p = _paths(root)
     applied = _read_applied(root, target)
     if applied is _PENDING:
         # interrupted fold: the target may hold a partial application —
@@ -296,19 +303,23 @@ def _fold_new_commits(
         applied = -1
     dirs = [
         d
-        for d in _committed_dirs(log_dir)
+        for d in _committed_dirs(p[f"{feed}_log"])
         if int(os.path.basename(d).split("=", 1)[1]) > applied
     ]
     if not dirs:
         return
     top = max(int(os.path.basename(d).split("=", 1)[1]) for d in dirs)
     _write_intent(root, target, applied, top)
-    changes = (
-        spark.read.option("basePath", log_dir)
-        .option("mergeSchema", "true")
-        .parquet(*dirs)
-    )
-    changes = changes.drop("commit")
+    reader = spark.read.option("basePath", p[f"{feed}_log"])
+    schema = _stored_schema(_read_meta(p[feed]))
+    if schema is not None:
+        # the feed table's sidecar schema plus _op spares the footer-union
+        # inference job; evolution only widens, so it covers every
+        # published commit (older commits read NULL for newer columns)
+        reader = reader.schema(schema.add("_op", "string"))
+    else:
+        reader = reader.option("mergeSchema", "true")
+    changes = reader.parquet(*dirs).drop("commit")
     if transform is not None:
         # per-consumer change-row reshape (e.g. the CMS fold explodes each
         # (token, tf) change into its d seeded counter cells) — the feed
@@ -329,12 +340,12 @@ def drain_token_stats(spark: SparkSession, root: str) -> None:
     everything is applied. :func:`apply_doc_updates` calls the same folds
     inline, so routine ingest never needs this."""
     p = _paths(root)
-    for log_dir, target, group_cols, sum_cols in [
-        (p["postings_log"], p["tok_stats"], ["token"], ["tf"]),
-        (p["postings_log"], p["doc_stats"], ["doc_id"], ["tf"]),
-        (p["bigrams_log"], p["bigram_stats"], ["w1", "w2"], ["n"]),
+    for feed, target, group_cols, sum_cols in [
+        ("postings", p["tok_stats"], ["token"], ["tf"]),
+        ("postings", p["doc_stats"], ["doc_id"], ["tf"]),
+        ("bigrams", p["bigram_stats"], ["w1", "w2"], ["n"]),
     ]:
-        _fold_new_commits(spark, root, log_dir, target, group_cols, sum_cols)
+        _fold_new_commits(spark, root, feed, target, group_cols, sum_cols)
     _reseed_if_adopted(spark, root)
 
 
@@ -345,6 +356,24 @@ def init_token_stats(spark: SparkSession, sf_dir: str, root: str) -> None:
         F.col("doc_id") % DOC_ARRIVAL_MOD != 0
     )
     apply_doc_updates(spark, root, docs)
+
+
+def _doc_buckets(ids: DataFrame, *targets: str) -> list:
+    """``touched_buckets`` for doc-keyed merges whose every updates and
+    scope row carries a doc_id of ``ids``: its buckets under each target's
+    stored bucket count, from ONE collect (None: no sidecar yet)."""
+    nbs = [(_read_meta(t) or {}).get("num_buckets") for t in targets]
+    cols = [_key_bucket(["doc_id"], n).alias(f"b{n}") for n in set(nbs) - {None}]
+    rows = ids.select(*cols).distinct().collect() if cols else []
+    return [None if n is None else sorted({r[f"b{n}"] for r in rows}) for n in nbs]
+
+
+def _run_concurrently(spark: SparkSession, fns) -> None:
+    """Run ``fns`` on pool threads that inherit the caller's Spark local
+    properties (its job group); re-raise the first failure."""
+    with ThreadPoolExecutor(len(fns)) as ex:
+        for f in [ex.submit(inheritable_thread_target(spark)(fn)) for fn in fns]:
+            f.result()
 
 
 def apply_doc_updates(
@@ -368,76 +397,55 @@ def apply_doc_updates(
     two-phase watermark sidecars never collide, and the shared
     ``_APPLIED`` dict is lock-guarded. The critical path drops from
     merge + k folds to merge + max(fold)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     p = _paths(root)
     scope = docs.select("doc_id")
-
-    # On the UPDATE path (target exists), pin the computed change frames:
-    # merge_upsert executes its updates frame several times (touched-bucket
-    # collect, changelog insert/pre/post pieces, staging write — r13
-    # attribution), and _doc_tf/_doc_bigrams are tokenize+aggregate passes
-    # over the batch, so unpinned they re-ran per reference. The INITIAL
-    # load skips the pin: there updates is the full base corpus and the
-    # initial merge references it once — a checkpoint would just write the
-    # whole postings image to local storage twice. Each chain gates on its
-    # OWN target dir (ADVICE r13): a prior interrupted run can leave
-    # postings existing while bigrams does not, and a shared gate would
-    # then pin the full initial bigrams load.
-    def _chain_pin(target_dir: str):
-        return pin if os.path.isdir(target_dir) else (lambda df: df)
-
-    # ONE tokenize pass for both chains (r14): the postings and bigrams
-    # lineages share the pinned (doc_id, toks) frame instead of each
-    # re-tokenizing ``docs``. Pinned on BOTH paths — unlike the aggregate
-    # pins above, the token frame has two consumers even on the initial
-    # load, so the pin replaces a second full corpus scan+tokenize.
+    # ONE tokenize pass, pinned: both merges and the bucket collect
+    # below read it — the batch's only frame with two or more consumers
     toks = pin(_doc_toks(docs))
+    # every updates and scope row of both merges carries a batch doc_id, so
+    # one collect over toks gives each existing target its touched buckets
+    post_b, bi_b = _doc_buckets(toks, p["postings"], p["bigrams"])
 
     def _postings_chain() -> None:
         merge_upsert(
             spark,
-            _chain_pin(p["postings"])(_doc_tf(toks=toks)),
+            _doc_tf(toks=toks),
             p["postings"],
             keys=["doc_id", "token"],
             bucket_keys=["doc_id"],
             scope=scope,
             changelog_dir=p["postings_log"],
+            touched_buckets=post_b,
         )
         # fold wave: every consumer of the postings feed at once (its own
         # inner pool — submitting back into the outer pool could exhaust
         # it and deadlock the waiting chain)
-        folds = [
+        _run_concurrently(spark, [
             lambda: _fold_new_commits(
-                spark, root, p["postings_log"], p["tok_stats"], ["token"], ["tf"]
+                spark, root, "postings", p["tok_stats"], ["token"], ["tf"]
             ),
             lambda: _fold_new_commits(
-                spark, root, p["postings_log"], p["doc_stats"], ["doc_id"], ["tf"]
+                spark, root, "postings", p["doc_stats"], ["doc_id"], ["tf"]
             ),
             *extra_postings_folds,
-        ]
-        with ThreadPoolExecutor(len(folds)) as ex2:
-            for f in [ex2.submit(fn) for fn in folds]:
-                f.result()
+        ])
 
     def _bigrams_chain() -> None:
         merge_upsert(
             spark,
-            _chain_pin(p["bigrams"])(_doc_bigrams(toks=toks)),
+            _doc_bigrams(toks=toks),
             p["bigrams"],
             keys=["doc_id", "w1", "w2"],
             bucket_keys=["doc_id"],
             scope=scope,
             changelog_dir=p["bigrams_log"],
+            touched_buckets=bi_b,
         )
         _fold_new_commits(
-            spark, root, p["bigrams_log"], p["bigram_stats"], ["w1", "w2"], ["n"]
+            spark, root, "bigrams", p["bigram_stats"], ["w1", "w2"], ["n"]
         )
 
-    with ThreadPoolExecutor(2) as ex:
-        futs = [ex.submit(_postings_chain), ex.submit(_bigrams_chain)]
-        for f in futs:
-            f.result()
+    _run_concurrently(spark, [_postings_chain, _bigrams_chain])
     # the merges above swapped bucket files out from under any tokmemo
     # frames this session adopted over this root — re-seed them here, in
     # the callee, so no caller can leave stale frames behind (r12 #1)
@@ -718,23 +726,23 @@ def apply_curation_docs(spark: SparkSession, root: str, docs: DataFrame) -> None
         F.col("pass_gopher").cast("long").alias("n_pass_gopher"),
         F.col("admitted").cast("long").alias("n_admitted"),
     )
-    if os.path.isdir(p["doc_flags"]):
-        # update path: pin the computed gate frame once — merge_upsert
-        # references its updates several times (same r13 attribution as
-        # apply_doc_updates); the initial full load stays unpinned
-        flags = flags.transform(pin)
+    scope = docs.select("doc_id")
+    # the scope holds every doc_id of the batch: its buckets are the
+    # merge's touched set, so the gate frame is read once, by the merge
+    (touched,) = _doc_buckets(scope, p["doc_flags"])
     merge_upsert(
         spark,
         flags,
         p["doc_flags"],
         keys=["doc_id"],
-        scope=docs.select("doc_id"),
+        scope=scope,
         changelog_dir=p["doc_flags_log"],
+        touched_buckets=touched,
     )
     _fold_new_commits(
         spark,
         root,
-        p["doc_flags_log"],
+        "doc_flags",
         p["curate_rollup"],
         ["source", "lang"],
         ["n_pass_gopher", "n_admitted"],

@@ -30,6 +30,10 @@ pattern as the committer dial (session.py):
 All three materialize eagerly exactly once, so the VALUES every consumer
 sees are identical across modes; only fault-tolerance and plan shape
 differ.
+
+The rule: pin only a frame that two or more consumers execute (collects,
+writes, joins that each run the plan), and name them at the call site. A
+frame with one consumer runs once anyway; a pin only adds its jobs.
 """
 
 from __future__ import annotations

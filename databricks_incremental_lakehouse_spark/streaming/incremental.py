@@ -161,6 +161,16 @@ def _read_meta(target_path: str, strict: bool = False) -> dict | None:
         return None
 
 
+def _stored_schema(meta: dict | None) -> StructType | None:
+    """The sidecar's pinned payload schema, forced nullable (this covers
+    sidecars pinned before the rule: files from buckets untouched since an
+    evolution backfill NULL into the new column, so a non-null declaration
+    would be a lie the optimizer can exploit). None without one."""
+    if meta is None or not meta.get("schema"):
+        return None
+    return _nullable_schema(StructType.fromJson(meta["schema"]))
+
+
 def _has_table(target_path: str) -> bool:
     """Whether a TABLE lives at ``target_path`` — a merge sidecar (staged
     or promoted) or any parquet data. A directory holding only auxiliary
@@ -282,13 +292,8 @@ def read_merge_target(spark: SparkSession, target_path: str) -> DataFrame:
     column, partition dirs still discovered) and fixes the column order.
     Legacy targets without a schema sidecar fall back to the footer-UNION
     read (``mergeSchema``)."""
-    meta = _read_meta(target_path)
-    if meta is not None and meta.get("schema"):
-        # forced nullable (covers sidecars pinned before the rule): files
-        # from buckets untouched since an evolution backfill NULL into the
-        # new column, so a non-null declaration would be a lie the
-        # optimizer can exploit
-        schema = _nullable_schema(StructType.fromJson(meta["schema"]))
+    schema = _stored_schema(_read_meta(target_path))
+    if schema is not None:
         return (
             spark.read.schema(schema)
             .parquet(target_path)
@@ -601,6 +606,7 @@ def merge_upsert(
 
     _recover_swaps(target_path)
     initial = not _has_table(target_path)
+    meta = None
     if not initial:
         meta = _read_meta(target_path, strict=True)
         if meta is not None:
@@ -631,14 +637,9 @@ def merge_upsert(
         # legacy targets without one fall back to the footer-UNION read —
         # single-footer inference sees only the first-listed file and
         # misses evolved columns living elsewhere (r7 review reproduction).
-        if meta is not None and meta.get("schema"):
-            stored_schema = StructType.fromJson(meta["schema"])
-        else:
-            stored_schema = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(target_path)
-                .schema
-            )
+        stored_schema = _stored_schema(meta) or (
+            spark.read.option("mergeSchema", "true").parquet(target_path).schema
+        )
         for fld in stored_schema.fields:
             if fld.name == BUCKET_COL:
                 continue
@@ -668,26 +669,20 @@ def merge_upsert(
             .distinct()
             .withColumn(BUCKET_COL, _key_bucket(bucket_keys, num_buckets))
         )
-    staging = target_path.rstrip("/") + "._staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    levels = len(partition_cols) + 1
-
-    pending_changelog: tuple[str, str] | None = None
+    changes = None
     if initial:
         merged = updates
-        touched: set[int] = set()
+        touched = None
+        if changelog_dir is not None:  # initial load: everything is an insert
+            changes = updates.drop(BUCKET_COL).withColumn("_op", F.lit("insert"))
     else:
         if touched_buckets is not None:
-            # caller-supplied bucket set (internal fast path —
-            # apply_cdf_delta already collected exactly this set to prune
-            # its stored-totals read, and its updates/scope frames are
-            # grouped on the same keys, so re-collecting here would be one
-            # redundant Spark job per fold). The caller ASSERTS every
-            # updates/scope/deletes row hashes into these buckets under
-            # the target's stored bucket count; a wrong set would merge
-            # against a partial current image, so only callers that derive
-            # the set with _key_bucket over the same columns may use it.
-            # Checked after the staging write, before any swap.
+            # caller-supplied bucket set (apply_doc_updates collects one
+            # set for both of its merges; re-collecting would re-run the
+            # updates lineage). The caller ASSERTS every updates/scope/
+            # deletes row hashes into these buckets under the stored bucket
+            # count (_key_bucket over the same columns); staged strays are
+            # refused in _commit_buckets, before any swap.
             touched = set(touched_buckets)
         else:
             tsrc = updates.select(BUCKET_COL)
@@ -763,26 +758,18 @@ def merge_upsert(
                 merged = kept.unionByName(updates)
         else:
             # Changelog-bearing merge: ONE null-safe full-outer join of
-            # updates vs the touched stored rows classifies every key
-            # (insert / matched / stored-only) and yields BOTH the change
-            # rows and the merged image (r14, guide §2.4 — the r13 shape
-            # derived the changelog's insert/preimage/postimage/delete
-            # pieces as four separate semi/anti joins plus the merge's own
-            # anti join, re-scanning the touched buckets per piece; VERDICT
-            # r13 #1). Both sides are key-unique (updates via dedup_latest,
-            # the target by merge invariant), so the join is 1:1 and each
-            # r13 piece maps to a row-local predicate over it:
-            #   insert           = update present, stored absent
-            #   pre/postimage    = both present (on_match='update')
-            #   delete           = stored-only and (in scope | in deletes)
-            #   merged kept-row  = stored row that the r13 anti-join chain
-            #                      kept (scope is bucket-key based, so a
-            #                      key-matched row outside the scope is
-            #                      kept ALONGSIDE its update — the explode
-            #                      emits both, exactly the old union)
-            # The joined frame is pinned: the changelog write and the
-            # staging write both consume it, and unpinned each would
-            # re-execute the join (the computed-frame pin discipline).
+            # updates vs the touched stored rows classifies every key and
+            # yields BOTH the change rows and the merged image. Both sides
+            # are key-unique (updates via dedup_latest, the target by merge
+            # invariant), so the join is 1:1 and each piece is a row-local
+            # predicate over it:
+            #   insert        = update present, stored absent
+            #   pre/postimage = both present (on_match='update')
+            #   delete        = stored-only and (in scope | in deletes)
+            #   kept row      = stored row the anti-join chain above keeps
+            #                   (a key-matched row outside the bucket-key
+            #                   scope is kept ALONGSIDE its update)
+            # Pinned: two consumers, the change write and the staging write.
             ucols = list(updates.columns)  # payload + BUCKET_COL
             payload = [c for c in ucols if c != BUCKET_COL]
             u = updates.select(
@@ -837,8 +824,7 @@ def merge_upsert(
                 return F.struct(*fields)
 
             # change rows: payload columns + _op, one array element per
-            # r13 piece (a scope-AND-deletes hit emits two delete rows,
-            # exactly as the old separate pieces did)
+            # piece (a scope-AND-deletes hit emits two delete rows)
             elems = [F.when(up & ~cp, _as_struct("u", payload, "insert"))]
             if on_match != "keep":
                 elems += [
@@ -857,8 +843,7 @@ def merge_upsert(
                 F.explode(F.array_compact(F.array(*elems))).alias("_e")
             ).select("_e.*")
 
-            # merged image from the same pinned join — the r13 anti-join
-            # chain as row predicates
+            # merged image from the same pinned join
             if on_match == "keep":
                 u_emit = up & ~cp
                 c_emit = cp
@@ -878,25 +863,40 @@ def merge_upsert(
                 ).alias("_m")
             ).select("_m.*")
 
-            # the change commit is computed (and physically written) BEFORE
-            # the swap. The write lands in a hidden staging dir, published
-            # into the feed only AFTER the target swap succeeds — so the
-            # feed can never hold a commit the table did not apply, and a
-            # torn write is invisible (no rename, and reads require
-            # _SUCCESS). The residual window is the inverse: a crash
-            # between the final bucket swap and the publish loses the
-            # feed's copy of an applied commit.
-            commit_no = _next_commit(changelog_dir)
-            cl_staging = os.path.join(
-                changelog_dir, f".commit={commit_no}._staging"
-            )
-            shutil.rmtree(cl_staging, ignore_errors=True)
-            changes.write.parquet(cl_staging)
-            pending_changelog = (
-                cl_staging,
-                os.path.join(changelog_dir, f"commit={commit_no}"),
-            )
+    _commit_buckets(
+        merged, target_path, keys, num_buckets, bucket_keys, partition_cols,
+        touched, meta, partition_scope, changes, changelog_dir,
+    )
 
+
+def _commit_buckets(
+    merged: DataFrame,
+    target_path: str,
+    keys: Sequence[str],
+    num_buckets: int,
+    bucket_keys: Sequence[str],
+    partition_cols: Sequence[str],
+    touched: set[int] | None,
+    meta: dict | None = None,
+    partition_scope: dict | None = None,
+    changes: DataFrame | None = None,
+    changelog_dir: str | None = None,
+) -> None:
+    """The write half of :func:`merge_upsert` and :func:`apply_cdf_delta`:
+    commit ``merged`` (with ``BUCKET_COL``; EVERY row the ``touched``
+    buckets keep, or the whole table when ``touched`` is None) over the
+    stored sidecar ``meta``. Staging write, stray check, schema stage,
+    swaps, stale dirs, empty placeholder, schema promote, publish.
+    ``changes`` is staged as a hidden commit before any swap and published
+    into the feed after the last — the feed never holds a commit the table
+    did not apply, and a torn write is invisible (reads need ``_SUCCESS``).
+    The residual window: a crash between the final swap and the publish
+    loses the feed's copy of an applied commit."""
+    partition_cols = list(partition_cols)
+    initial = touched is None
+    staging = target_path.rstrip("/") + "._staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    levels = len(partition_cols) + 1
     # cluster rows by their destination dir before the write: each
     # (partition..., bucket) dir then receives one file from one task
     # instead of a sliver from every shuffle partition — file count stays
@@ -915,13 +915,24 @@ def merge_upsert(
         # job): a staged bucket whose current image was never read would
         # replace that bucket with the batch's rows alone
         shutil.rmtree(staging, ignore_errors=True)
-        if pending_changelog is not None:
-            shutil.rmtree(pending_changelog[0], ignore_errors=True)
         raise ValueError(
             f"merge into {target_path} wrote buckets {sorted(strays)} outside "
             f"touched_buckets {sorted(touched)}"
         )
-    new_schema = updates.drop(BUCKET_COL).schema
+    if initial and not staged:  # empty initial batch: no file-less target
+        shutil.rmtree(staging, ignore_errors=True)
+        return
+    pending_changelog = None
+    if changes is not None:
+        commit_no = _next_commit(changelog_dir)
+        cl_staging = os.path.join(changelog_dir, f".commit={commit_no}._staging")
+        shutil.rmtree(cl_staging, ignore_errors=True)
+        changes.write.parquet(cl_staging)
+        pending_changelog = (
+            cl_staging,
+            os.path.join(changelog_dir, f"commit={commit_no}"),
+        )
+    new_schema = merged.drop(BUCKET_COL).schema
     schema_changed = not initial and (
         meta is None
         or meta.get("schema") != _nullable_schema(new_schema).jsonValue()
@@ -937,59 +948,41 @@ def merge_upsert(
             schema=new_schema, staged=True,
         )
     if initial:
-        if not staged:  # empty initial batch: don't create a file-less target
-            shutil.rmtree(staging, ignore_errors=True)
-            return
         _swap_dir(staging, target_path)
         _write_meta(
-            target_path,
-            keys,
-            num_buckets,
-            bucket_keys,
-            partition_cols,
-            schema=updates.drop(BUCKET_COL).schema,
+            target_path, keys, num_buckets, bucket_keys, partition_cols,
+            schema=new_schema,
         )
-        if changelog_dir is not None:  # initial load: everything is an insert
-            commit_no = _next_commit(changelog_dir)
-            cl_staging = os.path.join(
-                changelog_dir, f".commit={commit_no}._staging"
+    else:
+        for rel in sorted(staged):
+            dst = os.path.join(target_path, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            _swap_dir(os.path.join(staging, rel), dst)
+        # an affected dir absent from staging lost ALL its rows (scoped
+        # delete or a key that moved partition value) — drop it
+        stale = {
+            rel
+            for rel in _leaf_dirs(target_path, levels)
+            if _dir_bucket(rel) in touched and _dir_in_scope(rel, partition_scope)
+        } - staged
+        for rel in sorted(stale):
+            shutil.rmtree(os.path.join(target_path, rel))
+        shutil.rmtree(staging, ignore_errors=True)
+        if not _leaf_dirs(target_path, levels):
+            # a delete/scoped merge removed the LAST row: materialize the
+            # empty state as one zero-row, schema-bearing file so the target
+            # stays readable (a dir with only _merge_meta.json fails schema
+            # inference). Placeholder partition values ("0") carry zero
+            # rows, so they never surface in results; numeric/string
+            # partition cols both parse.
+            leaf = os.path.join(
+                target_path, *[f"{c}=0" for c in partition_cols], f"{BUCKET_COL}=0"
             )
-            shutil.rmtree(cl_staging, ignore_errors=True)
-            updates.drop(BUCKET_COL).withColumn(
-                "_op", F.lit("insert")
-            ).write.parquet(cl_staging)
-            _publish_commit(
-                cl_staging, os.path.join(changelog_dir, f"commit={commit_no}")
-            )
-        return
-    for rel in sorted(staged):
-        dst = os.path.join(target_path, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        _swap_dir(os.path.join(staging, rel), dst)
-    # an affected dir absent from staging lost ALL its rows (scoped delete
-    # or a key that moved partition value) — drop it
-    stale = {
-        rel
-        for rel in _leaf_dirs(target_path, levels)
-        if _dir_bucket(rel) in touched and _dir_in_scope(rel, partition_scope)
-    } - staged
-    for rel in sorted(stale):
-        shutil.rmtree(os.path.join(target_path, rel))
-    shutil.rmtree(staging, ignore_errors=True)
-    if not _leaf_dirs(target_path, levels):
-        # a delete/scoped merge removed the LAST row: materialize the empty
-        # state as one zero-row, schema-bearing file so the target stays
-        # readable (a dir with only _merge_meta.json fails schema inference).
-        # Placeholder partition values ("0") carry zero rows, so they never
-        # surface in results; numeric/string partition cols both parse.
-        leaf = os.path.join(
-            target_path, *[f"{c}=0" for c in partition_cols], f"{BUCKET_COL}=0"
-        )
-        merged.drop(*partition_cols, BUCKET_COL).limit(0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(leaf)
-    if schema_changed:
-        _promote_meta(target_path)
+            merged.drop(*partition_cols, BUCKET_COL).limit(0).coalesce(
+                1
+            ).write.mode("overwrite").parquet(leaf)
+        if schema_changed:
+            _promote_meta(target_path)
     if pending_changelog is not None:
         # the table now fully holds this merge — publish its change commit
         _publish_commit(*pending_changelog)
@@ -1072,8 +1065,6 @@ def apply_cdf_delta(
     groups with :func:`read_cdf_totals`, which filters the tombstones."""
     group_cols = list(group_cols)
     sum_cols = list(sum_cols)
-    if batch_df.isEmpty():
-        return
     sign = F.when(
         F.col("_op").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
@@ -1087,49 +1078,16 @@ def apply_cdf_delta(
                 for c in sum_cols
             ],
         )
-    ).transform(pin)
+    )
     sess = batch_df.sparkSession
+    _recover_swaps(target_path)
     # an existing TABLE is one with a merge sidecar or parquet data — a
     # directory holding only auxiliary files (e.g. the fold watermark's
     # intent stamp, written before the first fold lands) is still an empty
     # target. strict: a corrupt sidecar over real data must fail loudly,
     # never read-as-empty.
-    if _has_table(target_path):
-        meta = _read_meta(target_path, strict=True)
-        if meta is None:
-            raise ValueError(
-                f"cdf totals target {target_path!r} has data but no merge "
-                "sidecar; refusing to treat it as empty"
-            )
-        nb = int(meta["num_buckets"])
-        buckets = sorted(
-            {
-                r[0]
-                for r in delta.select(_key_bucket(group_cols, nb).alias("b"))
-                .distinct()
-                .collect()
-            }
-        )
-        reader = sess.read
-        if meta.get("schema"):
-            # the sidecar's schema spares the footer-inference job; the
-            # bucket partition column is still discovered from the paths
-            reader = reader.schema(
-                _nullable_schema(StructType.fromJson(meta["schema"]))
-            )
-        cur0 = (
-            reader.parquet(target_path)
-            .filter(F.col(BUCKET_COL).isin(buckets))
-            .drop(BUCKET_COL)
-        )
-        # null-safe: a NULL-valued group's stored totals must join its delta
-        # (plain = would drop the stored side and corrupt the running sum)
-        dk = delta.select(*group_cols)
-        current = cur0.join(
-            F.broadcast(dk), _ns_cond(cur0, dk, group_cols), "left_semi"
-        )
-    else:
-        buckets = None  # initial load: the merge skips the collect anyway
+    initial = not _has_table(target_path)
+    if initial:
         current = sess.createDataFrame(
             [],
             ", ".join(
@@ -1138,11 +1096,46 @@ def apply_cdf_delta(
                 + [f"sum_{c} double" for c in sum_cols]
             ),
         )
-    # delta's columns are renamed before the outer join: `current` already
-    # carries delta in its lineage (the pruning semi-join above), so
-    # dataset-qualified refs would be ambiguous; unique names need none.
-    # The join itself is null-safe — a NULL-valued group must pair its
-    # stored totals with its delta or the running sum silently forks.
+    else:
+        meta = _read_meta(target_path, strict=True)
+        if meta is None:
+            raise ValueError(
+                f"cdf totals target {target_path!r} has data but no merge "
+                "sidecar; refusing to treat it as empty"
+            )
+        if (meta["keys"], meta["bucket_keys"]) != (group_cols, group_cols):
+            raise ValueError(
+                f"cdf totals target {target_path!r} is keyed on {meta['keys']!r}"
+            )
+        nb = int(meta["num_buckets"])
+        # two consumers: the touched-bucket collect and the join below
+        delta = pin(delta)
+        buckets = sorted(
+            {
+                r[0]
+                for r in delta.select(_key_bucket(group_cols, nb).alias("b"))
+                .distinct()
+                .collect()
+            }
+        )
+        if not buckets:  # empty batch: nothing to fold
+            return
+        # the sidecar's schema spares the footer-inference job; the bucket
+        # partition column is still discovered from the paths
+        schema = _stored_schema(meta)
+        current = (
+            (sess.read if schema is None else sess.read.schema(schema))
+            .parquet(target_path)
+            .filter(F.col(BUCKET_COL).isin(buckets))
+            .drop(BUCKET_COL)
+        )
+    # ONE null-safe full outer join of every stored row of the touched
+    # buckets with the delta IS the new image of those buckets: matched
+    # groups add their delta, stored-only groups pass through unchanged,
+    # delta-only groups are new — so it is committed as is, with no second
+    # read or key match. A NULL-valued group must pair its stored totals
+    # with its delta or the running sum silently forks. delta's columns
+    # are renamed so the condition needs no dataset-qualified refs.
     delta_r = delta.select(
         *[F.col(c).alias(f"_g_{c}") for c in group_cols],
         "_dn",
@@ -1151,13 +1144,7 @@ def apply_cdf_delta(
     cond = F.col(group_cols[0]).eqNullSafe(F.col(f"_g_{group_cols[0]}"))
     for c in group_cols[1:]:
         cond = cond & F.col(c).eqNullSafe(F.col(f"_g_{c}"))
-    joined = current.join(delta_r, cond, "full_outer")
-    # pinned (r14, the c5e81e1 discipline): `new` is a COMPUTED frame —
-    # bucket-pruned stored-totals read + full-outer join — and the merge
-    # below executes its updates twice (touched-bucket collect, staging
-    # write). O(touched groups) rows; one execution instead of two per
-    # fold, across every stats/sketch/rollup fold in the warehouse.
-    new = joined.select(
+    new = current.join(delta_r, cond, "full_outer").select(
         *[
             F.coalesce(F.col(c), F.col(f"_g_{c}")).alias(c)
             for c in group_cols
@@ -1173,18 +1160,17 @@ def apply_cdf_delta(
             ).alias(f"sum_{c}")
             for c in sum_cols
         ],
-    ).transform(pin)
-    # the touched-bucket set was already collected above (the pruned
-    # stored-totals read); `new`'s groups are exactly the delta's groups
-    # (current was semi-joined onto them), so hand the set to the merge
-    # and skip its redundant bucket-collect job (one job per fold)
-    merge_upsert(
-        sess,
-        new,
-        target_path,
-        keys=group_cols,
-        scope=delta.select(*group_cols),
-        touched_buckets=buckets,
+    )
+    if initial:
+        # the first fold creates the target (an empty batch creates none)
+        merge_upsert(sess, new, target_path, keys=group_cols)
+        return
+    if [f.dataType for f in new.schema] != [f.dataType for f in current.schema]:
+        # a widened group column would split the buckets' physical types
+        raise ValueError(f"cdf delta {new.schema} does not match {target_path!r}")
+    _commit_buckets(
+        new.withColumn(BUCKET_COL, _key_bucket(group_cols, nb)),
+        target_path, group_cols, nb, group_cols, [], set(buckets), meta,
     )
 
 

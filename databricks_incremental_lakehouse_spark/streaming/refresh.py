@@ -605,10 +605,8 @@ def apply_order_updates(
         def _monthly_merge() -> None:
             if month_prep is None:
                 return
-            # pinned: merge_upsert executes its updates frame several
-            # times (touched-bucket collect, changelog pieces, staging
-            # write — r13 attribution), so a COMPUTED update frame pays
-            # its aggregation once here instead of per reference
+            # pinned: two consumers inside merge_upsert, its
+            # touched-bucket collect and its staging write
             merge_upsert(
                 spark,
                 monthly_sales_base(month_prep).transform(pin),

@@ -1184,6 +1184,31 @@ def test_cdf_delta_null_group(spark, tmp_path):
     assert got == {None: (2, 15.0), "a": (1, 2.0)}
 
 
+def test_cdf_delta_empty_batch_is_a_no_op(spark, tmp_path):
+    """An empty change batch creates no totals target, and on an existing
+    target it leaves every file byte-identical."""
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+    )
+
+    totals = str(tmp_path / "totals")
+    empty = spark.createDataFrame([], "g string, v double, _op string")
+    apply_cdf_delta(empty, totals, ["g"], ["v"])
+    assert not os.path.exists(totals)
+    assert not os.path.exists(totals + "._staging")
+
+    b1 = spark.createDataFrame(
+        [("a", 2.0, "insert"), ("b", 3.0, "insert")], "g string, v double, _op string"
+    )
+    apply_cdf_delta(b1, totals, ["g"], ["v"])
+    before = _snapshot(totals)
+    apply_cdf_delta(empty, totals, ["g"], ["v"])
+    assert _snapshot(totals) == before
+    got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()}
+    assert got == {"a": (1, 2.0), "b": (1, 3.0)}
+
+
 def test_changelog_commit_published_after_swap(spark, tmp_path):
     """Crash-safety contract of the feed: a torn commit dir (no _SUCCESS)
     is invisible to read_changelog, its slot is not reused, and a stranded
