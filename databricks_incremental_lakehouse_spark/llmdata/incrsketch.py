@@ -40,7 +40,7 @@ from .. import memo
 from ..pinning import pin
 
 from ..operators.rounding import round_dbl_sql
-from ..streaming.incremental import merge_upsert, read_merge_target
+from ..streaming.incremental import merge_upsert, read_cdf_totals, read_merge_target
 from ..tables import load_table
 from .sketches import (
     HLL_M,
@@ -349,9 +349,7 @@ def cms_heavy_hitters_answer(spark: SparkSession, root: str) -> DataFrame:
     from .incrstats import token_stats
     from .sketches import CMS_D, CMS_TOPK, _cms_bucket
 
-    counters = read_merge_target(
-        spark, os.path.join(root, "cms_counters")
-    ).filter(F.col("n_rows") > 0).select(
+    counters = read_cdf_totals(spark, os.path.join(root, "cms_counters")).select(
         "seed", "bucket", F.col("sum_tf").cast("long").alias("c")
     )
     tokens = token_stats(spark, root).select(

@@ -23,6 +23,10 @@ This module builds exactly that on the existing merge machinery
   grouped by doc_id (``sum(tf)`` is the BM25 length normalizer).
 - ``bigram_stats`` — ((w1, w2), count): the bigrams feed aggregated.
 
+The statistics tables are merge-on-read: a fold appends the batch's
+signed per-group delta without reading the stored totals, every read
+(``token_stats`` & co., via ``read_cdf_totals``) sums base and pending
+deltas, and every ``num_buckets``-th fold compacts them into the base.
 Every delta is a signed commutative sum (``apply_cdf_delta``), so the
 maintained tables equal the from-scratch batch aggregates after ANY
 interleaving of commits — which is precisely what the registry oracle
@@ -179,8 +183,10 @@ def _paths(root: str) -> dict[str, str]:
 # against a persistent warehouse root would re-fold every commit and
 # silently DOUBLE-COUNT the aggregates (deltas are commutative, not
 # idempotent). The fold is TWO-PHASE: before applying, the sidecar is
-# stamped with ``pending_commit`` (intent); after the fold's last bucket
-# swap it is finalized to ``applied_commit`` alone. A crash anywhere
+# stamped with ``pending_commit`` (intent); once the fold's commit (its
+# delta publish, or the first fold's or a compaction's whole-target swap,
+# which carries the stamp with it) is on disk it is finalized to
+# ``applied_commit`` alone. A crash anywhere
 # between intent and finalize leaves the pending stamp behind, and the
 # next fold REBUILDS the aggregate deterministically from the full feed
 # (commit dirs are immutable, the aggregate is derived state) instead of
@@ -264,7 +270,7 @@ def _write_intent(root: str, target: str, applied: int, top: int) -> None:
 
 
 def _write_applied(root: str, target: str, top: int) -> None:
-    """Phase 2: finalize — the fold's last bucket swap is on disk."""
+    """Phase 2: finalize — the fold's commit is on disk."""
     _write_sidecar(target, {"applied_commit": int(top)})
     with _LOCK:
         _APPLIED[(root, target)] = int(top)

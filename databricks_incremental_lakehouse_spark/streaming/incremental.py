@@ -354,14 +354,15 @@ def _committed_dirs(changelog_dir: str) -> list[str]:
 
 
 def _publish_commit(staging: str, final: str) -> None:
-    """Atomically promote a fully-written staged commit dir into the feed.
-    A squatting partial dir (no ``_SUCCESS``) is garbage from a torn
-    pre-fix write — replaced; a committed dir at the same slot means a
-    second writer raced this one, which the single-writer contract forbids."""
+    """Atomically promote a fully-written staged commit dir into the feed
+    (or a staged delta into a totals target's pending deltas). A squatting
+    partial dir (no ``_SUCCESS``) is garbage from a torn pre-fix write —
+    replaced; a committed dir at the same slot means a second writer raced
+    this one, which the single-writer contract forbids."""
     if os.path.isdir(final):
         if os.path.isfile(os.path.join(final, "_SUCCESS")):
             raise RuntimeError(
-                f"changelog commit {final!r} already exists — concurrent "
+                f"commit {final!r} already exists — concurrent "
                 "writers on one merge target are not supported"
             )
         shutil.rmtree(final)
@@ -882,11 +883,15 @@ def _commit_buckets(
     changes: DataFrame | None = None,
     changelog_dir: str | None = None,
 ) -> None:
-    """The write half of :func:`merge_upsert` and :func:`apply_cdf_delta`:
-    commit ``merged`` (with ``BUCKET_COL``; EVERY row the ``touched``
-    buckets keep, or the whole table when ``touched`` is None) over the
-    stored sidecar ``meta``. Staging write, stray check, schema stage,
-    swaps, stale dirs, empty placeholder, schema promote, publish.
+    """The write half of :func:`merge_upsert` and of the CDF totals
+    compaction (:func:`apply_cdf_delta`): commit ``merged`` (with
+    ``BUCKET_COL``; EVERY row the ``touched`` buckets keep, or the whole
+    table when ``touched`` is None) over the stored sidecar ``meta``.
+    Staging write, stray check, schema stage, swaps, stale dirs, empty
+    placeholder, schema promote, publish. A whole-table commit is ONE swap
+    of the target dir: the layout sidecar and the target's other
+    top-level files (a fold's intent stamp) are staged with the data, so
+    no crash can leave the data without them.
     ``changes`` is staged as a hidden commit before any swap and published
     into the feed after the last — the feed never holds a commit the table
     did not apply, and a torn write is invisible (reads need ``_SUCCESS``).
@@ -948,11 +953,18 @@ def _commit_buckets(
             schema=new_schema, staged=True,
         )
     if initial:
-        _swap_dir(staging, target_path)
+        if os.path.isdir(target_path):
+            for name in os.listdir(target_path):
+                src = os.path.join(target_path, name)
+                if os.path.isfile(src) and not os.path.exists(
+                    os.path.join(staging, name)
+                ):
+                    shutil.copy2(src, staging)
         _write_meta(
-            target_path, keys, num_buckets, bucket_keys, partition_cols,
+            staging, keys, num_buckets, bucket_keys, partition_cols,
             schema=new_schema,
         )
+        _swap_dir(staging, target_path)
     else:
         for rel in sorted(staged):
             dst = os.path.join(target_path, rel)
@@ -1043,26 +1055,86 @@ def incremental_events_stream(
     return writer.start()
 
 
+# pending merge-on-read deltas of a CDF totals target, one ``d=<seq>`` dir
+# per fold. The leading '_' with no '=' keeps Spark's scan of the target
+# from listing them (as for META_FILE); read_cdf_totals adds them in.
+DELTAS_DIR = "_deltas"
+
+
+def _delta_dirs(target_path: str) -> list[str]:
+    """The published deltas of a totals target, in publish order (glob's
+    default skips a dot-prefixed staging dir)."""
+    return sorted(
+        glob.glob(os.path.join(target_path, DELTAS_DIR, "d=*")),
+        key=lambda p: int(os.path.basename(p).split("=", 1)[1]),
+    )
+
+
+def _parquet_rows(path: str) -> int:
+    """Rows written under ``path``, summed from the files' footers — no
+    Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(f).num_rows
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+    )
+
+
+def _read_totals(spark: SparkSession, target_path: str) -> DataFrame:
+    """Every group of a CDC totals target, tombstones included: its base
+    plus its pending deltas (see :func:`apply_cdf_delta`) summed per
+    group, in the base's column order and types. With no pending delta
+    the plan is the plain base read."""
+    _recover_swaps(target_path)
+    totals = read_merge_target(spark, target_path)
+    deltas = _delta_dirs(target_path)
+    if not deltas:
+        return totals
+    keys = _read_meta(target_path)["keys"]
+    # groupBy is null-safe: a NULL group's base row pairs with its deltas
+    return (
+        totals.unionByName(spark.read.schema(totals.schema).parquet(*deltas))
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in totals.columns if c not in keys])
+        .select(*totals.columns)
+    )
+
+
 def apply_cdf_delta(
     batch_df: DataFrame,
     target_path: str,
     group_cols: Sequence[str],
     sum_cols: Sequence[str],
 ) -> None:
-    """Apply one batch of change rows to the grouped totals target —
+    """Fold one batch of change rows into the grouped totals target —
     the delta arithmetic of :func:`incremental_cdf_aggregate_stream`,
     exposed for direct (batch) use and for the property tests that feed
     commits in arbitrary order (deltas are commutative sums, so any
     interleaving must converge to the same totals).
 
+    Merge-on-read (Delta's append-now, compact-later shape): the first
+    fold creates the base table through :func:`merge_upsert`. Every later
+    fold aggregates the batch to one signed ``(group_cols, n_rows,
+    sum_*)`` row per group (one shuffle) and publishes it as a new delta
+    dir with one rename; no stored row is read or rewritten.
+    :func:`read_cdf_totals` sums the base and the pending deltas. When the
+    pending deltas reach the target's stored ``num_buckets``, a compaction
+    sums them into a new base, which replaces the whole target in one
+    swap and so retires them: reads open at most ``num_buckets`` deltas,
+    and a fold rewrites 1/``num_buckets`` of the table amortized. An empty
+    batch publishes nothing (decided from the written files' footers, not
+    by a Spark job).
+
     Groups whose row count reaches zero are KEPT as explicit zero rows
-    (tombstones, bounded by distinct groups ever seen): under
-    out-of-order application a group can be TRANSIENTLY zero or negative
-    (a preimage arriving before its matching insert), and dropping it
-    would lose the partial sum — the bug the property test found when
-    this filtered ``n_rows > 0``. Out-of-order is not hypothetical: a
-    file-source drain lists ``commit=10`` before ``commit=2``. Read live
-    groups with :func:`read_cdf_totals`, which filters the tombstones."""
+    (tombstones, bounded by distinct groups ever seen), by the deltas and
+    by the compaction: under out-of-order application a group can be
+    TRANSIENTLY zero or negative (a preimage arriving before its matching
+    insert), and dropping it would lose the partial sum — the bug the
+    property test found when this filtered ``n_rows > 0``. Out-of-order
+    is not hypothetical: a file-source drain lists ``commit=10`` before
+    ``commit=2``. Read live groups with :func:`read_cdf_totals`, which
+    filters the tombstones."""
     group_cols = list(group_cols)
     sum_cols = list(sum_cols)
     sign = F.when(
@@ -1072,9 +1144,9 @@ def apply_cdf_delta(
         batch_df.withColumn("_sign", sign)
         .groupBy(*group_cols)
         .agg(
-            F.sum("_sign").alias("_dn"),
+            F.sum("_sign").cast("long").alias("n_rows"),
             *[
-                F.sum(F.col("_sign") * F.col(c)).alias(f"_d_{c}")
+                F.sum(F.col("_sign") * F.col(c)).cast("double").alias(f"sum_{c}")
                 for c in sum_cols
             ],
         )
@@ -1084,100 +1156,66 @@ def apply_cdf_delta(
     # an existing TABLE is one with a merge sidecar or parquet data — a
     # directory holding only auxiliary files (e.g. the fold watermark's
     # intent stamp, written before the first fold lands) is still an empty
-    # target. strict: a corrupt sidecar over real data must fail loudly,
-    # never read-as-empty.
-    initial = not _has_table(target_path)
-    if initial:
-        current = sess.createDataFrame(
-            [],
-            ", ".join(
-                [f"{c} {t}" for c, t in delta.select(*group_cols).dtypes]
-                + ["n_rows long"]
-                + [f"sum_{c} double" for c in sum_cols]
-            ),
-        )
-    else:
-        meta = _read_meta(target_path, strict=True)
-        if meta is None:
-            raise ValueError(
-                f"cdf totals target {target_path!r} has data but no merge "
-                "sidecar; refusing to treat it as empty"
-            )
-        if (meta["keys"], meta["bucket_keys"]) != (group_cols, group_cols):
-            raise ValueError(
-                f"cdf totals target {target_path!r} is keyed on {meta['keys']!r}"
-            )
-        nb = int(meta["num_buckets"])
-        # two consumers: the touched-bucket collect and the join below
-        delta = pin(delta)
-        buckets = sorted(
-            {
-                r[0]
-                for r in delta.select(_key_bucket(group_cols, nb).alias("b"))
-                .distinct()
-                .collect()
-            }
-        )
-        if not buckets:  # empty batch: nothing to fold
-            return
-        # the sidecar's schema spares the footer-inference job; the bucket
-        # partition column is still discovered from the paths
-        schema = _stored_schema(meta)
-        current = (
-            (sess.read if schema is None else sess.read.schema(schema))
-            .parquet(target_path)
-            .filter(F.col(BUCKET_COL).isin(buckets))
-            .drop(BUCKET_COL)
-        )
-    # ONE null-safe full outer join of every stored row of the touched
-    # buckets with the delta IS the new image of those buckets: matched
-    # groups add their delta, stored-only groups pass through unchanged,
-    # delta-only groups are new — so it is committed as is, with no second
-    # read or key match. A NULL-valued group must pair its stored totals
-    # with its delta or the running sum silently forks. delta's columns
-    # are renamed so the condition needs no dataset-qualified refs.
-    delta_r = delta.select(
-        *[F.col(c).alias(f"_g_{c}") for c in group_cols],
-        "_dn",
-        *[f"_d_{c}" for c in sum_cols],
-    )
-    cond = F.col(group_cols[0]).eqNullSafe(F.col(f"_g_{group_cols[0]}"))
-    for c in group_cols[1:]:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_g_{c}"))
-    new = current.join(delta_r, cond, "full_outer").select(
-        *[
-            F.coalesce(F.col(c), F.col(f"_g_{c}")).alias(c)
-            for c in group_cols
-        ],
-        (
-            F.coalesce(F.col("n_rows"), F.lit(0))
-            + F.coalesce(F.col("_dn"), F.lit(0))
-        ).alias("n_rows"),
-        *[
-            (
-                F.coalesce(F.col(f"sum_{c}"), F.lit(0.0))
-                + F.coalesce(F.col(f"_d_{c}"), F.lit(0.0))
-            ).alias(f"sum_{c}")
-            for c in sum_cols
-        ],
-    )
-    if initial:
-        # the first fold creates the target (an empty batch creates none)
-        merge_upsert(sess, new, target_path, keys=group_cols)
+    # target
+    if not _has_table(target_path):
+        # the first fold creates the base (an empty batch creates none)
+        merge_upsert(sess, delta, target_path, keys=group_cols)
         return
-    if [f.dataType for f in new.schema] != [f.dataType for f in current.schema]:
-        # a widened group column would split the buckets' physical types
-        raise ValueError(f"cdf delta {new.schema} does not match {target_path!r}")
-    _commit_buckets(
-        new.withColumn(BUCKET_COL, _key_bucket(group_cols, nb)),
-        target_path, group_cols, nb, group_cols, [], set(buckets), meta,
+    # strict: a corrupt sidecar over real data must fail loudly, never
+    # read-as-empty
+    meta = _read_meta(target_path, strict=True)
+    if meta is None:
+        raise ValueError(
+            f"cdf totals target {target_path!r} has data but no merge "
+            "sidecar; refusing to treat it as empty"
+        )
+    if (meta["keys"], meta["bucket_keys"]) != (group_cols, group_cols):
+        raise ValueError(
+            f"cdf totals target {target_path!r} is keyed on {meta['keys']!r}"
+        )
+    schema = _stored_schema(meta)
+    if schema is None:  # legacy target: no pinned schema in its sidecar
+        schema = read_merge_target(sess, target_path).schema
+    if sorted(delta.columns) != sorted(schema.fieldNames()):
+        raise ValueError(f"cdf delta {delta.schema} does not match {target_path!r}")
+    # coalescing with a NULL of the stored type widens a narrower group
+    # column to it; a wider one would split the table's physical type
+    delta = delta.select(
+        *[
+            F.coalesce(F.lit(None).cast(f.dataType), F.col(f.name)).alias(f.name)
+            if f.name in group_cols
+            else F.col(f.name)
+            for f in schema.fields
+        ]
     )
+    if [f.dataType for f in delta.schema] != [f.dataType for f in schema]:
+        raise ValueError(f"cdf delta {delta.schema} does not match {target_path!r}")
+    deltas = _delta_dirs(target_path)
+    seq = int(os.path.basename(deltas[-1]).split("=", 1)[1]) + 1 if deltas else 0
+    staging = os.path.join(target_path, f".d={seq}._staging")
+    shutil.rmtree(staging, ignore_errors=True)
+    delta.write.parquet(staging)
+    if not _parquet_rows(staging):  # empty batch: nothing to fold
+        shutil.rmtree(staging)
+        return
+    os.makedirs(os.path.join(target_path, DELTAS_DIR), exist_ok=True)
+    _publish_commit(staging, os.path.join(target_path, DELTAS_DIR, f"d={seq}"))
+    nb = int(meta["num_buckets"])
+    if len(deltas) + 1 >= nb:
+        # compaction: a crash before its swap leaves base + deltas, which
+        # read the same totals; _recover_swaps finishes a cut swap
+        _commit_buckets(
+            _read_totals(sess, target_path).withColumn(
+                BUCKET_COL, _key_bucket(group_cols, nb)
+            ),
+            target_path, group_cols, nb, group_cols, [], None, meta,
+        )
 
 
 def read_cdf_totals(spark: SparkSession, target_path: str) -> DataFrame:
     """The live groups of a CDC totals target (tombstoned zero-count
     groups excluded)."""
-    return read_merge_target(spark, target_path).filter(F.col("n_rows") > 0)
+    return _read_totals(spark, target_path).filter(F.col("n_rows") > 0)
 
 
 def incremental_cdf_aggregate_stream(
@@ -1195,15 +1233,17 @@ def incremental_cdf_aggregate_stream(
     carries enough to adjust it (+postimage/insert, -preimage/delete).
 
     Each micro-batch of change rows reduces to one signed delta per
-    group (a map-side-combined aggregate over the batch only); current
-    totals for the affected groups are read bucket-pruned from the totals
-    target and scope-replaced. Deltas are commutative sums, so commit
+    group (a map-side-combined aggregate over the batch only), appended
+    to the totals target as a pending delta without reading its stored
+    rows; :func:`read_cdf_totals` sums base and deltas, and a compaction
+    every ``num_buckets`` deltas folds them into the base (see
+    :func:`apply_cdf_delta`). Deltas are commutative sums, so commit
     files may arrive in any order; emptied groups persist as zero-count
-    tombstones (see :func:`apply_cdf_delta`) and are excluded by
-    :func:`read_cdf_totals`. At 100 TB this is the
-    difference between O(changes) and O(affected partitions) per refresh:
-    even the partition-restricted re-aggregate needs to rescan affected
-    partitions; the CDC consumer touches only the change rows.
+    tombstones and are excluded by :func:`read_cdf_totals`. At 100 TB
+    this is the difference between O(changes) and O(affected partitions)
+    per refresh: even the partition-restricted re-aggregate needs to
+    rescan affected partitions; the CDC consumer touches only the change
+    rows.
 
     Contract with :func:`checkpoint_changelog`: the feed must NOT be
     checkpointed while this consumer's streaming checkpoint references it —

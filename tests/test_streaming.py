@@ -793,7 +793,12 @@ def test_cdf_aggregate_stream_matches_batch(spark, tmp_path):
     }
     assert got == expect
     assert 3 not in got  # emptied group tombstoned, excluded from live reads
-    stored = {r.m: r.n_rows for r in read_merge_target(spark, totals).collect()}
+    from databricks_incremental_lakehouse_spark.streaming.incremental import (
+        _read_totals,
+    )
+
+    # base + pending deltas, unfiltered: the stored state of the totals
+    stored = {r.m: r.n_rows for r in _read_totals(spark, totals).collect()}
     assert stored[3] == 0  # ...but its tombstone persists for commutativity
 
 
@@ -1207,6 +1212,193 @@ def test_cdf_delta_empty_batch_is_a_no_op(spark, tmp_path):
     assert _snapshot(totals) == before
     got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()}
     assert got == {"a": (1, 2.0), "b": (1, 3.0)}
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    batches=st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=9),  # id
+                st.one_of(st.none(), st.integers(min_value=0, max_value=3)),  # group
+                st.integers(min_value=0, max_value=50),  # value
+            ),
+            min_size=1,
+            max_size=5,
+        ),
+        min_size=2,
+        max_size=5,
+    ),
+    order=st.randoms(),
+)
+def test_cdf_delta_compaction_property(spark, tmp_path_factory, batches, order):
+    """Random upsert batches (NULL groups included), their feed commits
+    applied in a RANDOM order to a totals target stored with 2 buckets, so
+    every second fold compacts its pending deltas into the base: the
+    totals equal a batch groupBy of the final target, across compactions."""
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+        read_changelog,
+    )
+
+    root = str(tmp_path_factory.mktemp("cdf_compact"))
+    target = os.path.join(root, "t")
+    cdf = os.path.join(root, "cdf")
+    totals = os.path.join(root, "totals")
+    # the totals target's layout is set by its first write: a zero-count
+    # tombstone with 2 buckets
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(None, 0, 0.0)], "g int, n_rows long, sum_v double"),
+        totals,
+        keys=["g"],
+        num_buckets=2,
+    )
+    for rows in batches:
+        dedup = {i: (g, float(v)) for i, g, v in rows}
+        merge_upsert(
+            spark,
+            spark.createDataFrame(
+                [(i, g, v) for i, (g, v) in sorted(dedup.items())],
+                "id long, g int, v double",
+            ),
+            target,
+            keys=["id"],
+            changelog_dir=cdf,
+        )
+
+    log = read_changelog(spark, cdf)
+    commits = [r.commit for r in log.select("commit").distinct().collect()]
+    assert len(commits) >= 2  # the second fold compacts
+    order.shuffle(commits)
+    for c in commits:
+        apply_cdf_delta(
+            log.filter(F.col("commit") == c).drop("commit"), totals, ["g"], ["v"]
+        )
+
+    got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()}
+    expect = {
+        r.g: (r.n, r.s)
+        for r in read_merge_target(spark, target)
+        .groupBy("g")
+        .agg(F.count("*").alias("n"), F.sum("v").alias("s"))
+        .collect()
+    }
+    assert got == expect, (got, expect)
+
+
+def test_cdf_pending_deltas_never_exceed_num_buckets(spark, tmp_path):
+    """A fold on an existing totals target publishes one delta; the fold
+    that brings the pending deltas to the stored num_buckets compacts them
+    into the base. So after each fold 1..num_buckets-1 deltas are pending,
+    never more, and the totals stay exact across the compaction."""
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+    )
+    from databricks_incremental_lakehouse_spark.streaming.incremental import (
+        _delta_dirs,
+        _read_meta,
+    )
+
+    totals = str(tmp_path / "totals")
+    want: dict = {}
+
+    def fold(i):
+        rows = [(f"g{i % 5}", float(i), "insert"), (None, 1.0, "insert")]
+        for g, v, _op in rows:
+            n, s = want.get(g, (0, 0.0))
+            want[g] = (n + 1, s + v)
+        apply_cdf_delta(
+            spark.createDataFrame(rows, "g string, v double, _op string"),
+            totals,
+            ["g"],
+            ["v"],
+        )
+
+    fold(0)  # creates the base
+    nb = _read_meta(totals)["num_buckets"]
+    pending = []
+    for i in range(1, nb + 3):
+        fold(i)
+        pending.append(len(_delta_dirs(totals)))
+    assert pending == list(range(1, nb)) + [0, 1, 2]
+    got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("crash_site", ["pre_swap", "mid_swap"])
+def test_cdf_compaction_crash_recovers_exact_totals(
+    spark, tmp_path, monkeypatch, crash_site
+):
+    """A compaction cut by a crash — after its staging write and before
+    its whole-target swap, or between the swap's two renames — leaves a
+    target that reads exact totals (base + every pending delta; the read
+    restores a moved-aside image), and the next fold compacts them. A
+    direct apply_cdf_delta caller has no intent stamp to rebuild from, so
+    the table alone must stay exact."""
+    import databricks_incremental_lakehouse_spark.streaming.incremental as inc
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+    )
+
+    totals = str(tmp_path / "totals")
+    merge_upsert(
+        spark,
+        spark.createDataFrame([("z", 0, 0.0)], "g string, n_rows long, sum_v double"),
+        totals,
+        keys=["g"],
+        num_buckets=2,
+    )
+    want: dict = {}
+
+    def fold(rows):
+        for g, v, op in rows:
+            s = 1 if op == "insert" else -1
+            n, t = want.get(g, (0, 0.0))
+            want[g] = (n + s, t + s * v)
+        apply_cdf_delta(
+            spark.createDataFrame(rows, "g string, v double, _op string"),
+            totals,
+            ["g"],
+            ["v"],
+        )
+
+    def live():
+        return {g: x for g, x in want.items() if x[0] > 0}
+
+    def read():
+        return {
+            r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()
+        }
+
+    real_swap = inc._swap_dir
+
+    def crash(src, dst):
+        if crash_site == "mid_swap":
+            os.rename(dst, inc._backup_path(dst))
+        raise _Boom(f"{crash_site}({dst})")
+
+    fold([("a", 2.0, "insert"), (None, 1.0, "insert")])
+    monkeypatch.setattr(inc, "_swap_dir", crash)
+    with pytest.raises(_Boom):  # the second delta is due for compaction
+        fold([("a", 2.0, "delete"), ("b", 3.0, "insert"), (None, 4.0, "insert")])
+    monkeypatch.setattr(inc, "_swap_dir", real_swap)
+    assert os.path.isdir(totals) == (crash_site == "pre_swap")
+    assert read() == live()
+    assert len(inc._delta_dirs(totals)) == 2
+
+    fold([("b", 1.0, "insert"), (None, 1.0, "delete")])
+    assert inc._delta_dirs(totals) == []
+    assert read() == live()
+    for dirpath, dirs, _files in os.walk(str(tmp_path)):
+        assert not [d for d in dirs if d.endswith(".old")], dirpath
 
 
 def test_changelog_commit_published_after_swap(spark, tmp_path):
