@@ -49,7 +49,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..memo import once, rmtree
-from ..pinning import pin
+from ..pinning import pin, unpin
 
 from ..operators.layout import read_store_meta, write_store_meta
 from ..operators.rounding import round_dbl
@@ -65,6 +65,19 @@ from .dedup import (
     minhash_bands,
 )
 from .incrstats import DOC_ARRIVAL_MOD
+from .similarity import (
+    _CCOS_V,
+    _KMEANS_CELLS_APPEND_WITH,
+    _PCOS,
+    ARRIVAL_MOD,
+    SEMDEDUP_COS,
+    SEMDEDUP_PROBE,
+    _assign_topk,
+    _block,
+    _emb,
+    _ivf_append_index,
+    _keepers,
+)
 
 # store partitions AT BUILD TIME; a probe prunes to the buckets its band
 # keys hash to. The LIVE bucket count is the store's sidecar meta
@@ -595,13 +608,6 @@ def _sem_append_index(
     cells the batch probes. Arrivals are assigned with the FROZEN codebook
     and appended — O(batch x nlist) ingest, the corpus is never
     re-assigned."""
-    from .similarity import (
-        ARRIVAL_MOD,
-        SEMDEDUP_PROBE,
-        _assign_topk,
-        _emb,
-        _ivf_append_index,
-    )
 
     def build() -> tuple[list, str, DataFrame]:
         emb = _emb(spark, sf_dir)
@@ -618,12 +624,11 @@ def _sem_append_index(
         arr_probes.write.mode("append").partitionBy("cl").parquet(path)
         return cent_rows, path, arr_probes
 
-    return once(
-        spark,
-        ("sem_append_index", sf_dir),
-        build,
-        lambda got: _rm_store_root(got[1]),
-    )
+    def release(got) -> None:
+        unpin(got[2])
+        _rm_store_root(got[1])
+
+    return once(spark, ("sem_append_index", sf_dir), build, release)
 
 
 def dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,8 +648,6 @@ def dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch x probe x avg_cell), never corpus-pairwise."""
     import pandas as pd
 
-    from .similarity import ARRIVAL_MOD, SEMDEDUP_COS
-
     _cent_rows, path, arr_probes = _sem_append_index(spark, sf_dir)
     cells = sorted(
         r["cl"] for r in arr_probes.select("cl").distinct().collect()
@@ -653,28 +656,17 @@ def dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[os.path.join(path, f"cl={c}") for c in cells]
     ).select("vec_id", "v", F.col("cl").cast("int").alias("cl"))
 
-    _MOD = ARRIVAL_MOD  # the vector-table arrival split
-    _empty = pd.DataFrame(
-        {"cl": [], "dup_of": [], "vec_id": [], "raw_cosine": []}
-    )
-
     def _cell_new_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        new_mask = (pdf["vec_id"].to_numpy() % _MOD) == 0
-        if not new_mask.any() or len(pdf) < 2:
-            return _empty
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        N = Vn[new_mask]
-        nid = ids[new_mask]
-        S = Vn @ N.T  # all-members x new — the batch-bounded block
+        # all-members x new — the batch-bounded block, in the group's
+        # stored row order
+        ids, mem, S = _block(pdf, pdf["vec_id"].to_numpy() % ARRIVAL_MOD == 0)
+        nid = ids[mem]
         # (i, j): member i is a LOWER-id mate of new vector j
-        keep = (S >= SEMDEDUP_COS - 1e-6) & (ids[:, None] < nid[None, :])
-        ii, jj = np.nonzero(keep)
-        if len(ii) == 0:
-            return _empty
+        ii, jj = np.nonzero(
+            (S >= SEMDEDUP_COS - 1e-6) & (ids[:, None] < nid[None, :])
+        )
         return pd.DataFrame(
             {
                 "cl": pdf["cl"].iloc[0],
@@ -684,38 +676,14 @@ def dedup_semantic_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    from pyspark.sql import Window
-
-    pairs = (
-        members.groupBy("cl")
-        .applyInPandas(
+    return _keepers(
+        members.groupBy("cl").applyInPandas(
             _cell_new_pairs, "cl int, dup_of long, vec_id long, raw_cosine double"
         )
-        .withColumn("cosine", round_dbl(F.col("raw_cosine"), 6))
-        .filter(F.col("cosine") >= SEMDEDUP_COS)
-        .groupBy("dup_of", "vec_id")
-        .agg(F.min("cl").alias("cl"), F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("dup_of").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "cl", "dup_of", "cosine")
     )
 
 
 def _sem_append_oracle() -> str:
-    from .similarity import (
-        ARRIVAL_MOD,
-        _CCOS_V,
-        _KMEANS_CELLS_APPEND_WITH,
-        _PCOS,
-        SEMDEDUP_COS,
-        SEMDEDUP_PROBE,
-    )
-
     # the append-codebook semantic replay: train on base (`e`), probe
     # EVERYTHING (`eall`) with the frozen centroids, pairwise within
     # shared probed cells, keeper per vec — restricted to arrival rows

@@ -45,21 +45,32 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .. import memo
-from ..pinning import pin
+from ..pinning import pin, unpin
 
 from ..operators import round_dbl
 from .similarity import (
+    _CCOS_Q,
+    _COS,
+    _KMEANS_CELLS_APPEND_WITH,
+    _KMEANS_CELLS_WITH,
+    ARRIVAL_MOD,
     N_QUERIES,
     TOP_K,
     _dot,
     _emb,
+    _grid_mean,
+    _ivf_append_index,
     _kmeans_cells_for,
     _norm,
     _nprobe_for,
     _probe_cells,
+    _probe_join,
+    _read_cells,
+    _rerank,
+    _rm_ivf_store_root,
 )
 
 PQ_M = 8  # subspaces
@@ -109,6 +120,13 @@ def _l2sq(a: str, cv) -> F.Column:
     )
 
 
+def _scaled_ip(a: str, b: str) -> F.Column:
+    """Inner product of two vector columns on the 6-dp grid, scaled to an
+    exact BIGINT (x ``_LUT_SCALE``) — one ADC lookup-table entry."""
+    ip = round_dbl(_dot(a, b), 6).cast("decimal(38,10)")
+    return F.round(ip * F.lit(_LUT_SCALE), 0).cast("long")
+
+
 def _assign_codes(sub: DataFrame, cb_rows: list[tuple[int, int, list[float]]]) -> DataFrame:
     """(vec_id, m, cl): nearest (grid-rounded L2^2, code-asc tiebreak)
     subspace centroid per subvector. The codebooks ride along as one
@@ -140,18 +158,7 @@ def _assign_codes(sub: DataFrame, cb_rows: list[tuple[int, int, list[float]]]) -
 def _centroids(assigned_sub: DataFrame) -> list[tuple[int, int, list[float]]]:
     """(m, cl, cv) rows — per-(subspace, code) mean subvector, components
     grid-rounded; PQ_M x PQ_KSUB rows, never data-sized."""
-    rows = (
-        assigned_sub.select("m", "cl", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "cl", "pos")
-        .agg(round_dbl(F.avg("val"), 6).alias("c"))
-        .groupBy("m", "cl")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s.c
-            ).alias("cv")
-        )
-        .collect()
-    )
+    rows = _grid_mean(assigned_sub, ["m", "cl"], "sv", "cv").collect()
     return [(int(r.m), int(r.cl), list(r.cv)) for r in rows]
 
 
@@ -188,7 +195,7 @@ def _pq_index_for(spark: SparkSession, sf_dir: str):
     def build():
         return _train_pq(_subvectors(_unit(_emb(spark, sf_dir))))
 
-    return memo.once(spark, ("pq_index", sf_dir), build)
+    return memo.once(spark, ("pq_index", sf_dir), build, lambda got: unpin(got[1]))
 
 
 def sim_ivf_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,28 +241,17 @@ def _pq_search(
         [(m, cl, cv) for m, cl, cv in cb_rows],
         "m int, cl int, cv array<double>",
     )
-    lut = (
-        qsub.join(F.broadcast(cb_df), "m")
-        .select(
-            F.col("query_id").alias("l_query_id"),
-            F.col("m").alias("l_m"),
-            F.col("cl").alias("l_code"),
-            F.round(
-                round_dbl(_dot("sv", "cv"), 6).cast("decimal(38,10)")
-                * F.lit(_LUT_SCALE),
-                0,
-            )
-            .cast("long")
-            .alias("ip_scaled"),
-        )
+    lut = qsub.join(F.broadcast(cb_df), "m").select(
+        F.col("query_id").alias("l_query_id"),
+        F.col("m").alias("l_m"),
+        F.col("cl").alias("l_code"),
+        _scaled_ip("sv", "cv").alias("ip_scaled"),
     )
 
     # ADC over the probed cells only: codes of a probed cell's members
     # join the query's LUT; score = exact integer sum over subspaces
-    probed_members = q2c.join(
-        cells.select(F.col("vec_id").alias("neighbor_id"), "cl"),
-        (F.col("probe_cell") == F.col("cl"))
-        & (F.col("query_id") != F.col("neighbor_id")),
+    probed_members = _probe_join(
+        q2c, cells.select(F.col("vec_id").alias("neighbor_id"), "cl")
     ).select("query_id", "qv", "neighbor_id", F.col("cl").alias("member_cl"))
     cand_scores = (
         probed_members.join(
@@ -287,13 +283,7 @@ def _pq_search(
         alut = qunit.crossJoin(F.broadcast(anchor_df)).select(
             "a_query_id",
             F.col("cl").alias("a_cl"),
-            F.round(
-                round_dbl(_dot("u", "av"), 6).cast("decimal(38,10)")
-                * F.lit(_LUT_SCALE),
-                0,
-            )
-            .cast("long")
-            .alias("base_scaled"),
+            _scaled_ip("u", "av").alias("base_scaled"),
         )
         cand_scores = (
             cand_scores.join(
@@ -306,29 +296,7 @@ def _pq_search(
             )
             .select("query_id", "qv", "neighbor_id", "score_scaled")
         )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("score_scaled").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        cand_scores.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= PQ_CAND_K)
-        .select("query_id", "qv", "neighbor_id")
-    )
-    rerank = F.broadcast(cand).join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v"), "neighbor_id"
-    )
-    scored = rerank.withColumn(
-        "cosine",
-        round_dbl(_dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank(cand_scores, "score_scaled", PQ_CAND_K, emb)
 
 
 # ---------------------------------------------------------------------------
@@ -351,20 +319,9 @@ def _residual_index_for(
         _cent, cells, _nlist = _kmeans_cells_for(spark, sf_dir)
         unit = _unit(emb)
         cell_map = cells.select("vec_id", F.col("cl").cast("int").alias("cl"))
-        anchors = (
-            unit.join(cell_map, "vec_id")
-            .select("cl", F.posexplode("u").alias("pos", "val"))
-            .groupBy("cl", "pos")
-            .agg(round_dbl(F.avg("val"), 6).alias("c"))
-            .groupBy("cl")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s.c,
-                ).alias("av")
-            )
-            .collect()
-        )
+        anchors = _grid_mean(
+            unit.join(cell_map, "vec_id"), ["cl"], "u", "av"
+        ).collect()
         anchor_rows = [(int(r.cl), list(r.av)) for r in anchors]
         adf = spark.createDataFrame(anchor_rows, "cl int, av array<double>")
         res = (
@@ -377,7 +334,9 @@ def _residual_index_for(
         cb, codes = _train_pq(_subvectors(res))
         return anchor_rows, cb, codes
 
-    return memo.once(spark, ("pq_residual_index", sf_dir), build)
+    return memo.once(
+        spark, ("pq_residual_index", sf_dir), build, lambda got: unpin(got[2])
+    )
 
 
 def sim_ivf_topk_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,7 +372,6 @@ def _pq_append_index_for(spark: SparkSession, sf_dir: str) -> tuple[list, DataFr
     cost is one assignment pass over the batch's M subvectors —
     O(batch x KSUB x M), corpus never re-encoded — plus the append write
     (a code row is 3 ints; the appended files are posting-list sized)."""
-    from .similarity import ARRIVAL_MOD
 
     def build() -> tuple[list, str]:
         emb = _emb(spark, sf_dir)
@@ -429,12 +387,7 @@ def _pq_append_index_for(spark: SparkSession, sf_dir: str) -> tuple[list, DataFr
         _assign_codes(arr_sub, cb).write.mode("append").parquet(path)
         return cb, path
 
-    cb, path = memo.once(
-        spark,
-        ("pq_append_index", sf_dir),
-        build,
-        lambda got: memo.rmtree(os.path.dirname(got[1].rstrip("/"))),
-    )
+    cb, path = memo.once(spark, ("pq_append_index", sf_dir), build, _rm_ivf_store_root)
     return cb, spark.read.parquet(path)
 
 
@@ -445,13 +398,9 @@ def sim_ivf_pq_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank machinery as :func:`sim_ivf_topk_pq`. The oracle replays
     train-on-base / encode-everything declaratively, so the no-retrain
     ingest contract is value-hash-checked cross-engine."""
-    from .similarity import _ivf_append_index
-
     emb = _emb(spark, sf_dir)
     cent_rows, path, nlist = _ivf_append_index(spark, sf_dir)
-    cells = spark.read.parquet(path).select(
-        "vec_id", F.col("cl").cast("int").alias("cl")
-    )
+    cells = _read_cells(spark, path, "vec_id")
     cb_rows, codes = _pq_append_index_for(spark, sf_dir)
     return _pq_search(
         spark, emb, cent_rows, _nprobe_for(nlist), cb_rows, codes, cells
@@ -459,14 +408,6 @@ def sim_ivf_pq_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_oracle(append: bool = False, residual: bool = False) -> str:
-    from .similarity import (
-        ARRIVAL_MOD,
-        _COS,
-        _CCOS_Q,
-        _KMEANS_CELLS_APPEND_WITH,
-        _KMEANS_CELLS_WITH,
-    )
-
     r6 = "CAST(ROUND(CAST({x} AS DECIMAL(38,10)), 6) AS DOUBLE)"
     l2 = r6.format(
         x=(

@@ -3,19 +3,37 @@
 - ``sim_topk_bruteforce``  : exact cosine top-k for a query set — the
   correctness baseline. Queries broadcast against the full table; one pass,
   no shuffle until the per-query top-k window.
-- ``sim_ivf_topk``         : IVF-style approximate top-k — coarse quantize
-  to centroids (computed per ``label`` cell, standing in for k-means which
-  would be iterative), probe only the nearest centroid's cell. This is the
-  100-TB shape: centroid assignment prunes the candidate set by ~nlist x.
+- ``sim_ivf_topk``         : IVF approximate top-k — a coarse quantizer
+  trained by ``KMEANS_ITERS`` Lloyd iterations over ``nlist =
+  clamp(sqrt(N))`` cells; each query probes its ``_nprobe_for(nlist)``
+  nearest cells and searches only their vectors. This is the 100-TB
+  shape: the probe prunes the candidate set to the probed cells.
 - ``sim_hyperplane_lsh``   : random-hyperplane (sign-LSH) bucketing — the
   other scale path; hyperplanes are derived deterministically from md5 so
   the same basis is reproducible in Python, Spark and DuckDB, and the
   query is oracle-checked end to end. Recall vs the brute-force baseline
   is additionally asserted in tests.
 
-All vector math is JVM-side built-in higher-order functions (zip_with /
-aggregate) — no Python UDFs in the hot path; cosines are rounded through
-the portable decimal grid (operators/rounding.py) before thresholds/ranks.
+Every query of the family (here, in ``pq.py`` and in ``incrdedup.py``) is
+a composition of one top-k kernel:
+
+- ``_cos``: the grid-rounded cosine of two vector columns;
+- ``_rank`` / ``_top``: row_number over (part, score desc, tie asc), cut
+  at k;
+- ``_topk``: score (query, neighbor) pairs and keep each query's TOP_K;
+- ``_rerank``: stage 2 of a two-stage search (exact re-rank of the
+  stage-1 survivors);
+- ``_probe_cells`` / ``_probe_join``: each query's nearest cells, joined
+  to a cell store;
+- ``_write_cells`` / ``_read_cells``: the cl-partitioned cell store;
+- ``_block`` / ``_kth_keep``: the numpy score block of one IVF cell and
+  its k-th-with-slack pre-selection;
+- ``_keepers``: the SemDeDup keeper tail.
+
+Spark-side vector math is JVM built-in higher-order functions (zip_with /
+aggregate); the numpy kernels emit RAW cosines only. Every cosine is
+rounded through the portable decimal grid (operators/rounding.py) on the
+JVM before a threshold or a rank.
 """
 
 from __future__ import annotations
@@ -26,9 +44,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .. import memo
-from ..pinning import pin
 
 from ..operators import round_dbl
+from ..operators.layout import read_store_meta, write_store_meta
 from ..tables import load_table
 
 TOP_K = 5
@@ -56,27 +74,124 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the top-k kernel -------------------------------------------------------
+
+
+def _cos(a: str, b: str):
+    """Cosine of two vector columns on the portable 6-dp grid — the Spark
+    spelling of the oracles' ``_COS`` family."""
+    return round_dbl(_dot(a, b) / F.nullif(_norm(a) * _norm(b), F.lit(0.0)), 6)
+
+
+def _rank(df: DataFrame, part: str, score: str, tie: str, rank: str) -> DataFrame:
+    """Add ``rank``: row_number within ``part`` by (score desc, tie asc)."""
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w))
+
+
+def _top(
+    df: DataFrame, part: str, score: str, tie: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """Rank-and-cut: the first ``k`` rows of each ``part`` by :func:`_rank`."""
+    return _rank(df, part, score, tie, rank).filter(F.col(rank) <= k)
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    """(query_id, qv): the serving query set."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def _pairs(queries: DataFrame, cand: DataFrame) -> DataFrame:
+    """Every (query, candidate) pair but self, the query side broadcast."""
+    return F.broadcast(queries).join(cand, F.col("query_id") != F.col("neighbor_id"))
+
+
+def _topk(pairs: DataFrame, *keep: str) -> DataFrame:
+    """Score (query_id, qv) x (neighbor_id, v) pairs and keep each query's
+    ``TOP_K``: (query_id, *keep, neighbor_id, cosine, rank)."""
+    scored = pairs.withColumn("cosine", _cos("qv", "v"))
+    return _top(scored, "query_id", "cosine", "neighbor_id", TOP_K).select(
+        "query_id", *keep, "neighbor_id", "cosine", "rank"
+    )
+
+
+def _rerank(stage1: DataFrame, score: str, k: int, emb: DataFrame) -> DataFrame:
+    """Stage 2 of a two-stage search: each query's ``k`` best stage-1
+    candidates by ``score`` (broadcast — ``k`` per query) re-ranked by
+    exact full-precision cosine against ``emb``."""
+    cand = _top(stage1, "query_id", score, "neighbor_id", k, "crank").select(
+        "query_id", "qv", "neighbor_id"
+    )
+    return _topk(
+        F.broadcast(cand).join(
+            emb.select(F.col("vec_id").alias("neighbor_id"), "v"), "neighbor_id"
+        )
+    )
+
+
+def _probe_join(q2c: DataFrame, cells: DataFrame) -> DataFrame:
+    """Each query's probed cells (:func:`_probe_cells`) joined to a cell
+    store's (neighbor_id, cl, ...) rows, self excluded."""
+    return q2c.join(
+        cells,
+        (F.col("probe_cell") == F.col("cl"))
+        & (F.col("query_id") != F.col("neighbor_id")),
+    )
+
+
+_SLACK = 1e-5
+
+
+def _kth_keep(S, allowed, k: int):
+    """Per-row k-th-with-slack pre-selection over a RAW cosine block: the
+    ``allowed`` entries within ``_SLACK`` of the row's k-th best allowed
+    score (every allowed entry of a row with <= k columns).
+
+    This is a provable superset of the grid-rounded top-k: rounding to
+    the 6-dp grid moves a raw cosine by < 5e-7, so an entry more than
+    1e-5 below the k-th raw score is beaten by k entries even after
+    rounding. The authoritative round + rank happen JVM-side, where the
+    oracle's half-up decimal grid is reproduced exactly (np.round is
+    half-even — the sim_topk_vectorized lesson)."""
+    import numpy as np
+
+    masked = np.where(allowed, S, -np.inf)
+    if masked.shape[1] > k:
+        kth = np.partition(masked, -k, axis=1)[:, -k]
+    else:
+        kth = np.full(masked.shape[0], -np.inf)
+    return allowed & (S >= (kth - _SLACK)[:, None])
+
+
+def _block(pdf, members=None):
+    """The score block of one IVF cell group, in the group's row order:
+    unit-normalize the vectors, then one BLAS matmul. Returns ``(ids, mem,
+    S)`` — S is ``Vn @ Vn.T`` (all x all; ``mem`` = every row) or ``Vn @
+    Vn[mem].T`` (all x the rows where the boolean ``members`` holds).
+
+    This is the justified Arrow/numpy case: each cell block is one matmul
+    instead of |cell|^2 interpreted zip_with/aggregate cosines (measured
+    30x at sf0.1). Only RAW cosines leave it; the callers round on the
+    JVM. Row order changes the BLAS result in the last ulp, so a kernel
+    that sorts its group sorts before calling this."""
+    import numpy as np
+
+    V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    ids = pdf["vec_id"].to_numpy()
+    if members is None:
+        return ids, np.arange(len(ids)), Vn @ Vn.T
+    mem = np.nonzero(members)[0]
+    return ids, mem, Vn @ Vn[mem].T
+
+
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for each query vector (vec_id < 10)."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pairs = F.broadcast(queries).join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v")),
-        F.col("query_id") != F.col("neighbor_id"),
-    )
-    scored = pairs.withColumn(
-        "cosine",
-        round_dbl(_dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _topk(
+        _pairs(_queries(emb), emb.select(F.col("vec_id").alias("neighbor_id"), "v"))
     )
 
 
@@ -222,13 +337,7 @@ def _calibrate_store_nprobe(
     once per build/recluster, each bounded to a CALIB_SAMPLE_MAX-row
     candidate slice above the sampling threshold (constant per-recluster
     cost at any corpus size)."""
-    from ..operators.layout import write_store_meta
-
-    store = spark.read.parquet(path).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "v",
-        F.col("cl").cast("int").alias("cl"),
-    )
+    store = _read_cells(spark, path, F.col("vec_id").alias("neighbor_id"), "v")
     # parquet footer count — no data scan; the slice modulus must come
     # from the store row count so both engines derive the same s
     n_store = store.count()
@@ -238,48 +347,27 @@ def _calibrate_store_nprobe(
         if sample_mod == 1
         else store.filter(F.col("neighbor_id") % sample_mod == 0)
     )
-    calib_q = (
-        store.filter(
-            F.col("neighbor_id") % CALIB_QUERY_MOD == CALIB_QUERY_REM
-        )
+    # <= CALIB_MAX_QUERIES rows, read by both passes: collected to the
+    # driver (one job, nothing left persisted) rather than pinned
+    calib_q = spark.createDataFrame(
+        store.filter(F.col("neighbor_id") % CALIB_QUERY_MOD == CALIB_QUERY_REM)
         .orderBy("neighbor_id")
         .limit(CALIB_MAX_QUERIES)
         .select(F.col("neighbor_id").alias("query_id"), F.col("v").alias("qv"))
-        .transform(pin)
+        .collect(),
+        "query_id long, qv array<double>",
     )
 
-    def _topk(pairs: DataFrame) -> set:
-        scored = pairs.withColumn(
-            "cosine",
-            round_dbl(
-                _dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)),
-                6,
-            ),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
+    def top(pairs: DataFrame) -> set:
         return {
             (r.query_id, r.neighbor_id)
-            for r in scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
-            .collect()
+            for r in _topk(pairs).select("query_id", "neighbor_id").collect()
         }
 
-    exact = _topk(
-        F.broadcast(calib_q).join(
-            cand, F.col("query_id") != F.col("neighbor_id")
-        )
-    )
+    exact = top(_pairs(calib_q, cand))
     sq = _sqrt_nprobe(nlist)
-    q2c = _probe_cells(spark, store, cent_rows, sq, queries=calib_q)
-    approx = _topk(
-        q2c.join(
-            cand,
-            (F.col("probe_cell") == F.col("cl"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
+    approx = top(
+        _probe_join(_probe_cells(spark, store, cent_rows, sq, queries=calib_q), cand)
     )
     recall = len(approx & exact) / len(exact) if exact else 1.0
     mode = "sqrt" if recall >= CALIB_RECALL_MIN else "frac"
@@ -298,8 +386,6 @@ def _store_nprobe(nlist: int, path: str) -> int:
     """Serving width for a materialized store: the store's own build-time
     calibration picks sqrt, and an uncalibrated/structureless store keeps
     the swept 5/8 default."""
-    from ..operators.layout import read_store_meta
-
     if read_store_meta(path).get("nprobe_mode") == "sqrt":
         return _sqrt_nprobe(nlist)
     return _nprobe_for(nlist)
@@ -325,34 +411,29 @@ def _params_cte(src: str) -> str:
 )"""
 
 
-def _centroids_of(assigned: DataFrame) -> DataFrame:
-    """cl, cv: element-wise mean vector per cluster, components rounded
-    through the portable decimal grid so Spark and the oracle agree."""
+def _grid_mean(df: DataFrame, keys: list[str], vcol: str, out: str) -> DataFrame:
+    """(*keys, out): element-wise mean of the vector column ``vcol`` per
+    ``keys`` group, components rounded through the portable decimal grid
+    so Spark and the oracle agree — the centroid step of every k-means
+    here (coarse cells, PQ subspace codebooks, residual anchors)."""
     return (
-        assigned.select("cl", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cl", "pos")
+        df.select(*keys, F.posexplode(vcol).alias("pos", "val"))
+        .groupBy(*keys, "pos")
         .agg(round_dbl(F.avg("val"), 6).alias("c"))
-        .groupBy("cl")
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s.c
-            ).alias("cv")
+            ).alias(out)
         )
     )
-
-
-# kernel pre-selection slack for centroid scoring (same proof as
-# _NEG_SLACK below): grid rounding moves a raw cosine by < 5e-7, so a
-# centroid more than 1e-5 below a row's k-th best raw score cannot enter
-# the rounded top-k — excluding it is safe.
-_SCORE_SLACK = 1e-5
 
 
 def _assign_candidates(
     emb: DataFrame, cent_rows: list[tuple[int, list[float]]], k: int
 ) -> DataFrame:
-    """Input rows + ``(cl, raw)`` candidate pairs: every centroid within
-    ``_SCORE_SLACK`` of the row's k-th best RAW cosine — a provable
+    """Input rows + ``(cl, raw)`` candidate pairs: every centroid the
+    k-th-with-slack pre-selection (:func:`_kth_keep`) keeps — a provable
     superset of the grid-rounded top-k.
 
     This is the scoring half of centroid assignment, and it is the
@@ -371,17 +452,11 @@ def _assign_candidates(
     cls_arr = np.array([int(c) for c, _ in rows], dtype=np.int32)
     C = np.array([[float(x) for x in v] for _, v in rows], dtype=np.float64)
     cnorms = np.sqrt((C * C).sum(axis=1))
-    kk = min(int(k), len(rows))
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import StructType
 
-    out_schema = StructType(
-        list(emb.schema.fields)
-        + [StructField("cl", IntegerType()), StructField("raw", DoubleType())]
+    # a copy: ``emb.schema`` is the frame's own cached schema object
+    out_schema = StructType(list(emb.schema.fields)).add("cl", "integer").add(
+        "raw", "double"
     )
 
     def gen(batches):
@@ -393,16 +468,11 @@ def _assign_candidates(
             denom = np.outer(vn, cnorms)
             with np.errstate(divide="ignore", invalid="ignore"):
                 S = np.where(denom > 0.0, (V @ C.T) / denom, -np.inf)
-            if S.shape[1] > kk:
-                kth = np.partition(S, -kk, axis=1)[:, -kk]
-            else:
-                kth = np.full(S.shape[0], -np.inf)
-            keep = S >= (kth - _SCORE_SLACK)[:, None]
             # a zero-norm row scores -inf everywhere and -inf >= -inf is
-            # True — without this mask it would fan out one candidate per
-            # centroid instead of dropping like the old NULL-cosine path
-            keep &= np.isfinite(S)
-            ii, jj = np.nonzero(keep)
+            # True — only finite scores are allowed, or it would fan out
+            # one candidate per centroid instead of dropping like the old
+            # NULL-cosine path
+            ii, jj = np.nonzero(_kth_keep(S, np.isfinite(S), int(k)))
             out = pdf.iloc[ii].copy()
             out["cl"] = cls_arr[jj]
             out["raw"] = S[ii, jj]
@@ -439,23 +509,25 @@ def _kmeans_cells(emb: DataFrame, nlist: int | None = None):
     cost was (iters+2) full scans instead of one (the ``count()`` that
     sizes nlist warms the same cache). At 100 TB the equivalent is
     training on a persisted *sample* (k-means needs only a representative
-    subset) while the final cell assignment streams over the full table."""
-    emb = emb.persist()  # stays referenced by the returned plan; LRU-evicted
+    subset) while the final cell assignment streams over the full table.
+
+    The returned ``cells`` plan reads the persisted ``emb`` (``persist``
+    returns the same frame), so the caller unpersists ``emb`` once it is
+    done with ``cells``."""
+    emb = emb.persist()
     if nlist is None:
         nlist = _nlist_for(emb.count())
     assigned = emb.select(
         "vec_id", "v", (F.col("vec_id") % nlist).cast("int").alias("cl")
     )
-    for _ in range(KMEANS_ITERS):
+    for _ in range(KMEANS_ITERS + 1):
         cent_rows = [
             (int(r.cl), list(r.cv))
-            for r in _centroids_of(assigned).collect()  # nlist rows, never data
+            # nlist rows, never data
+            for r in _grid_mean(assigned, ["cl"], "v", "cv").collect()
         ]
         assigned = _assign_to(emb, cent_rows)
-    cent_rows = [
-        (int(r.cl), list(r.cv)) for r in _centroids_of(assigned).collect()
-    ]
-    return cent_rows, _assign_to(emb, cent_rows), nlist
+    return cent_rows, assigned, nlist
 
 
 # the SHARED coarse quantizer per sf_dir is a session memo entry: three
@@ -470,20 +542,26 @@ def _kmeans_cells_for(spark: SparkSession, sf_dir: str):
     (session, sf_dir); the assignment frame is persist()-pinned so every
     consumer shares one materialization. Callers training on OTHER frames
     (subsets, scaled corpora) use :func:`_kmeans_cells` directly."""
+    emb = _emb(spark, sf_dir)
 
     def build():
-        cent_rows, cells, nlist = _kmeans_cells(_emb(spark, sf_dir))
+        cent_rows, cells, nlist = _kmeans_cells(emb)
         return cent_rows, cells.persist(), nlist
 
-    return memo.once(
-        spark, ("kmeans_cells", sf_dir), build, lambda got: got[1].unpersist()
-    )
+    def release(got) -> None:
+        # cells first: while cells stays cached, dropping the training
+        # persist it reads would re-plan (recache) it
+        got[1].unpersist()
+        emb.unpersist()
+
+    return memo.once(spark, ("kmeans_cells", sf_dir), build, release)
 
 
 def _rm_ivf_store_root(got: tuple) -> None:
-    """The memo ``release`` of a cell store entry ``(cent, path, nlist)``:
-    remove the store's mkdtemp root, so no ``ivf_idx_``/``ivf_app_`` temp
-    dir outlives its entry (VERDICT r10 #1)."""
+    """The memo ``release`` of a store entry whose value holds the store
+    path at index 1 (``(cent, path, nlist)`` cell stores, ``(cb, path)``
+    PQ code stores): remove the store's mkdtemp root, so no temp dir
+    outlives its entry (VERDICT r10 #1)."""
     memo.rmtree(os.path.dirname(got[1].rstrip("/")))
 
 
@@ -520,29 +598,13 @@ def _probe_cells(
     ranking crossJoin broadcast. ``queries`` overrides the standard
     query set (the calibration probe passes its held-out sample)."""
     cent_df = spark.createDataFrame(cent_rows, "cl int, cv array<double>")
-    if queries is None:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-    return (
-        F.broadcast(queries)
+    scored = (
+        F.broadcast(_queries(emb) if queries is None else queries)
         .crossJoin(F.broadcast(cent_df))
-        .withColumn(
-            "cdist",
-            round_dbl(
-                _dot("qv", "cv") / F.nullif(_norm("qv") * _norm("cv"), F.lit(0.0)), 6
-            ),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdist").desc(), F.col("cl").asc()
-                )
-            ),
-        )
-        .filter(F.col("crank") <= nprobe)
-        .select("query_id", "qv", F.col("cl").alias("probe_cell"))
+        .withColumn("cdist", _cos("qv", "cv"))
+    )
+    return _top(scored, "query_id", "cdist", "cl", nprobe, "crank").select(
+        "query_id", "qv", F.col("cl").alias("probe_cell")
     )
 
 
@@ -556,29 +618,22 @@ def _ivf_search(
     """The probe phase shared by the from-scratch and indexed IVF queries:
     each query ranks the nlist (broadcast) centroids, keeps its ``nprobe``
     nearest cells, and searches only those cells' vectors."""
-    emb = _emb(spark, sf_dir)
-    q2c = _probe_cells(spark, emb, cent_rows, nprobe)
-    scored = (
-        q2c.join(
-            cells.select(F.col("vec_id").alias("neighbor_id"), "cl", "v"),
-            (F.col("probe_cell") == F.col("cl"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .withColumn(
-            "cosine",
-            round_dbl(
-                _dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "probe_cell", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(_ivf_candidates(spark, sf_dir, cent_rows, cells, nprobe), "probe_cell")
+
+
+def _ivf_candidates(
+    spark: SparkSession,
+    sf_dir: str,
+    cent_rows: list[tuple[int, list[float]]],
+    cells: DataFrame,
+    nprobe: int,
+) -> DataFrame:
+    """(query_id, qv, probe_cell, neighbor_id, cl, v): every vector of each
+    query's ``nprobe`` nearest cells — the candidates of the top-k and the
+    range search."""
+    q2c = _probe_cells(spark, _emb(spark, sf_dir), cent_rows, nprobe)
+    cand = cells.select(F.col("vec_id").alias("neighbor_id"), "cl", "v")
+    return _probe_join(q2c, cand)
 
 
 def _sq8_scale(vcol: str = "v"):
@@ -603,24 +658,42 @@ def _sq8_codes(vcol: str = "v", scale_col: str = "scale"):
     oracle mirrors the clamp (LEAST/GREATEST). ``embedding_quantize``
     itself deliberately does NOT clamp: it is the audit operator and
     reports the raw INT codes."""
-    def code(x):
-        return F.least(
-            F.greatest(
-                F.coalesce(
-                    F.round(
-                        (x / F.nullif(F.col(scale_col), F.lit(0.0))).cast(
-                            "decimal(38,10)"
-                        ),
-                        0,
-                    ).cast("int"),
-                    F.lit(0),
-                ),
-                F.lit(-127),
-            ),
-            F.lit(127),
-        ).cast("tinyint")
+    return F.transform(
+        F.col(vcol),
+        lambda x: F.least(
+            F.greatest(_sq8_code(x, scale_col), F.lit(-127)), F.lit(127)
+        ).cast("tinyint"),
+    )
 
-    return F.transform(F.col(vcol), code)
+
+def _sq8_code(x, scale_col: str):
+    """One component's unclamped INT code: ``round(x / scale)`` on the
+    decimal grid, 0 for a zero scale."""
+    return F.coalesce(
+        F.round(
+            (x / F.nullif(F.col(scale_col), F.lit(0.0))).cast("decimal(38,10)"), 0
+        ).cast("int"),
+        F.lit(0),
+    )
+
+
+def _write_cells(cells: DataFrame, path: str, mode: str = "errorifexists") -> None:
+    """Write (vec_id, v, cl) rows to the cl-partitioned cell store: each
+    IVF cell is its own partition directory, and each row carries both
+    representations of its vector — the full ``v`` and the SQ8 ``(scale,
+    codes)`` pair."""
+    (
+        cells.withColumn("scale", _sq8_scale("v"))
+        .withColumn("codes", _sq8_codes("v", "scale"))
+        .write.mode(mode)
+        .partitionBy("cl")
+        .parquet(path)
+    )
+
+
+def _read_cells(spark: SparkSession, path: str, *cols) -> DataFrame:
+    """(*cols, cl) rows of the cell store at ``path``."""
+    return spark.read.parquet(path).select(*cols, F.col("cl").cast("int").alias("cl"))
 
 
 def _ivf_index(
@@ -643,12 +716,7 @@ def _ivf_index(
     def build():
         cent_rows, cells, nlist = _kmeans_cells_for(spark, sf_dir)
         path = os.path.join(tempfile.mkdtemp(prefix="ivf_idx_"), "cells")
-        (
-            cells.withColumn("scale", _sq8_scale("v"))
-            .withColumn("codes", _sq8_codes("v", "scale"))
-            .write.partitionBy("cl")
-            .parquet(path)
-        )
+        _write_cells(cells, path)
         # NOT calibrated: sim_ivf_topk_indexed is a deliberately
         # unswitched anchor (== from-scratch), so nothing reads this
         # store's nprobe_mode — calibrating it would be two full-store
@@ -665,9 +733,7 @@ def sim_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortizes it: ``sim_ivf_topk`` benches build+search, this query benches
     the steady-state search path over the cl-partitioned cell store."""
     cent_rows, path, nlist = _ivf_index(spark, sf_dir)
-    cells = spark.read.parquet(path).select(
-        "vec_id", "v", F.col("cl").cast("int").alias("cl")
-    )
+    cells = _read_cells(spark, path, "vec_id", "v")
     return _ivf_search(spark, sf_dir, cent_rows, cells, _nprobe_for(nlist))
 
 
@@ -843,26 +909,10 @@ def sim_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cand = (
-        cand_ids.join(F.broadcast(queries), "query_id")
-        .join(
+    return _topk(
+        cand_ids.join(F.broadcast(_queries(emb)), "query_id").join(
             emb.select(F.col("vec_id").alias("neighbor_id"), "v"), "neighbor_id"
         )
-    )
-    scored = cand.withColumn(
-        "cosine",
-        round_dbl(_dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -938,12 +988,12 @@ def sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q_mat = np.array([r.v for r in q_rows], dtype=np.float64)
     q_ids = np.array([r.vec_id for r in q_rows])
-    q_norm = np.linalg.norm(q_mat, axis=1)
+    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
 
     def _score(batches):
         for pdf in batches:
             m = np.array(pdf["v"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
+            norms = np.sqrt((m * m).sum(axis=1))
             denom = np.outer(norms, q_norm)
             denom[denom == 0.0] = np.nan
             cos = (m @ q_mat.T) / denom  # |batch| x N_QUERIES in one BLAS call
@@ -965,13 +1015,8 @@ def sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cosine", round_dbl(F.col("cosine_raw"), 6))
         .drop("cosine_raw")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top(scored, "query_id", "cosine", "neighbor_id", TOP_K).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -1015,19 +1060,28 @@ def _assign_topk(
     through the assignment; ``with_rank`` adds the 1-based probe rank
     (``crank == 1`` marks the primary cell)."""
     cand = _assign_candidates(emb.select("vec_id", "v", *extra), cent_rows, k)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cd").desc(), F.col("cl").asc()
+    cand = cand.withColumn("cd", round_dbl(F.col("raw"), 6))
+    ranked = _top(cand, "vec_id", "cd", "cl", k, "crank")
+    rank = [F.col("crank").cast("int").alias("crank")] if with_rank else []
+    return ranked.select("vec_id", "v", *extra, "cl", *rank)
+
+
+def _keepers(pairs: DataFrame) -> DataFrame:
+    """The SemDeDup keeper tail over a cell kernel's (cl, dup_of, vec_id,
+    raw_cosine) pairs: round to the grid, apply the threshold, collapse a
+    pair found in several shared cells (lowest cell, best cosine), and
+    keep each duplicate's best lower-id mate (lowest id on ties)."""
+    collapsed = (
+        pairs.withColumn("cosine", round_dbl(F.col("raw_cosine"), 6))
+        .filter(F.col("cosine") >= SEMDEDUP_COS)
+        .groupBy("dup_of", "vec_id")
+        .agg(F.min("cl").alias("cl"), F.max("cosine").alias("cosine"))
     )
-    ranked = (
-        cand.withColumn("cd", round_dbl(F.col("raw"), 6))
-        .withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= k)
+    return (
+        _rank(collapsed, "vec_id", "cosine", "dup_of", "rk")
+        .filter(F.col("rk") == 1)
+        .select("vec_id", "cl", "dup_of", "cosine")
     )
-    if with_rank:
-        return ranked.select(
-            "vec_id", "v", *extra, "cl", F.col("crank").cast("int").alias("crank")
-        )
-    return ranked.select("vec_id", "v", *extra, "cl")
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1052,31 +1106,15 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows, _cells, _nlist = _kmeans_cells_for(spark, sf_dir)
     probed = _assign_topk(emb, cent_rows, SEMDEDUP_PROBE)
 
-    # Within-cell pair scoring is the justified Arrow/numpy case: each
-    # cell block is one BLAS matmul instead of |cell|^2 interpreted
-    # zip_with/aggregate cosines (measured 30x at sf0.1). Raw doubles
-    # cross the boundary with a small slack below the threshold; the
-    # authoritative grid rounding and the exact threshold test stay
-    # JVM-side so the oracle's decimal half-up rounding is reproduced
-    # (np.round is half-even — the sim_topk_vectorized lesson).
-    _empty = pd.DataFrame(
-        {"cl": [], "dup_of": [], "vec_id": [], "raw_cosine": []}
-    )
-
+    # raw doubles leave the numpy block with a small slack below the
+    # threshold; the grid rounding and the exact threshold test stay on
+    # the JVM (_keepers)
     def _cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(pdf) < 2:
-            return _empty
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        S = Vn @ Vn.T
+        pdf = pdf.sort_values("vec_id")
+        ids, _mem, S = _block(pdf)
         iu, ju = np.nonzero(np.triu(S >= SEMDEDUP_COS - 1e-6, 1))
-        if len(iu) == 0:
-            return _empty
         return pd.DataFrame(
             {
                 "cl": pdf["cl"].iloc[0],
@@ -1086,24 +1124,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    pairs = (
-        probed.groupBy("cl")
-        .applyInPandas(
+    return _keepers(
+        probed.groupBy("cl").applyInPandas(
             _cell_pairs, "cl int, dup_of long, vec_id long, raw_cosine double"
         )
-        .withColumn("cosine", round_dbl(F.col("raw_cosine"), 6))
-        .filter(F.col("cosine") >= SEMDEDUP_COS)
-        # a pair sharing both probed cells appears twice: collapse it
-        .groupBy("dup_of", "vec_id")
-        .agg(F.min("cl").alias("cl"), F.max("cosine").alias("cosine"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("dup_of").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "cl", "dup_of", "cosine")
     )
 
 
@@ -1144,11 +1168,6 @@ SELECT vec_id, cl, dup_of, cosine FROM (
 # --- hard-negative mining ---------------------------------------------------
 
 K_NEG = 3  # hard negatives mined per anchor
-# kernel pre-selection slack: grid rounding moves a raw cosine by < 5e-7,
-# so keeping everything within 1e-5 of the per-cell k-th raw score provably
-# covers every pair the ROUNDED global top-k can contain (see kernel note)
-_NEG_SLACK = 1e-5
-
 
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mine hard negatives for contrastive training: for EVERY corpus
@@ -1161,14 +1180,8 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing a probed k-means cell (multi-probe ``SEMDEDUP_PROBE`` of
     ``N_LIST``), so the work is sum(|cell|^2) — cell-bounded, each cell
     an independent Arrow batch, never an all-pairs join. Inside a cell
-    one BLAS matmul scores the block; per anchor the kernel emits only
-    candidates within ``_NEG_SLACK`` of its k-th best raw cosine. That
-    pre-selection is a PROVABLE superset of the rounded global top-k:
-    grid rounding moves any raw score by < 5e-7, so a pair more than
-    1e-5 below the cell's k-th raw score is beaten by k pairs even
-    after rounding — excluding it is safe, and the authoritative
-    round + rank happen JVM-side where the oracle's half-up decimal
-    grid is reproduced exactly (np.round is half-even).
+    one BLAS matmul scores the block (:func:`_block`); per anchor the
+    kernel emits only its k-th-with-slack survivors (:func:`_kth_keep`).
 
     The reference has no ANN surface (its refined layer is relational,
     src/refined/refined_customer_orders.py); this family is part of the
@@ -1179,41 +1192,13 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows, _cells, _nlist = _kmeans_cells_for(spark, sf_dir)
     probed = _assign_topk(emb, cent_rows, SEMDEDUP_PROBE, extra=("label",))
 
-    _empty = pd.DataFrame(
-        {
-            "anchor_id": pd.Series(dtype="int64"),
-            "anchor_label": pd.Series(dtype="int32"),
-            "negative_id": pd.Series(dtype="int64"),
-            "negative_label": pd.Series(dtype="int32"),
-            "raw_cosine": pd.Series(dtype="float64"),
-        }
-    )
-
     def _cell_negs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(pdf) < 2:
-            return _empty
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        labels = pdf["label"].to_numpy()[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        S = Vn @ Vn.T
-        diff = labels[None, :] != labels[:, None]
-        # fully vectorized per-row k-th threshold: mask same-label entries
-        # to -inf; rows with <= K_NEG candidates get a -inf threshold (keep
-        # all their candidates), matching the unmasked semantics
-        masked = np.where(diff, S, -np.inf)
-        if masked.shape[1] > K_NEG:
-            kth = np.partition(masked, -K_NEG, axis=1)[:, -K_NEG]
-        else:
-            kth = np.full(masked.shape[0], -np.inf)
-        keep = diff & (S >= (kth - _NEG_SLACK)[:, None])
-        ii, jj = np.nonzero(keep)
-        if len(ii) == 0:
-            return _empty
+        pdf = pdf.sort_values("vec_id")
+        ids, _mem, S = _block(pdf)
+        labels = pdf["label"].to_numpy()
+        ii, jj = np.nonzero(_kth_keep(S, labels[None, :] != labels[:, None], K_NEG))
         return pd.DataFrame(
             {
                 "anchor_id": ids[ii],
@@ -1239,20 +1224,8 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cosine").alias("cosine"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K_NEG)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            "cosine",
-            "rank",
-        )
+    return _top(scored, "anchor_id", "cosine", "negative_id", K_NEG).select(
+        "anchor_id", "anchor_label", "negative_id", "negative_label", "cosine", "rank"
     )
 
 
@@ -1309,19 +1282,9 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach the registry surface (``scripts/check_correctness.py`` lints
     Array/Map/Struct alongside Decimal)."""
     emb = _emb(spark, sf_dir)
-    q = emb.select(
-        "vec_id",
-        "v",
-        _sq8_scale("v").alias("scale"),
+    q = emb.select("vec_id", "v", _sq8_scale("v").alias("scale")).withColumn(
+        "codes", F.transform(F.col("v"), lambda x: _sq8_code(x, "scale"))
     )
-    code = lambda x: F.coalesce(  # noqa: E731
-        F.round(
-            (x / F.nullif(F.col("scale"), F.lit(0.0))).cast("decimal(38,10)"),
-            0,
-        ).cast("int"),
-        F.lit(0),
-    )
-    q = q.withColumn("codes", F.transform(F.col("v"), code))
     err = F.zip_with(
         "v",
         "codes",
@@ -1402,56 +1365,14 @@ def sim_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 200-row candidate set broadcasts back onto the float table —
     no shuffle larger than the candidates anywhere."""
     emb = _emb(spark, sf_dir)
-    q = emb.select("vec_id", "v", _sq8_scale("v").alias("scale"))
-    code = lambda x: F.coalesce(  # noqa: E731 — same grid as embedding_quantize
-        F.round(
-            (x / F.nullif(F.col("scale"), F.lit(0.0))).cast("decimal(38,10)"), 0
-        ).cast("int"),
-        F.lit(0),
-    )
-    recon = q.select(
+    recon = emb.select("vec_id", "v", _sq8_scale("v").alias("scale")).select(
         F.col("vec_id").alias("neighbor_id"),
         F.transform(
-            F.col("v"), lambda x: code(x).cast("double") * F.col("scale")
+            F.col("v"), lambda x: _sq8_code(x, "scale").cast("double") * F.col("scale")
         ).alias("vq"),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored_q = (
-        F.broadcast(queries)
-        .join(recon, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_q",
-            round_dbl(
-                _dot("qv", "vq") / F.nullif(_norm("qv") * _norm("vq"), F.lit(0.0)),
-                6,
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored_q.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= QUANT_CAND_K)
-        .select("query_id", "qv", "neighbor_id")
-    )
-    rerank = F.broadcast(cand).join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v"), "neighbor_id"
-    )
-    scored = rerank.withColumn(
-        "cosine",
-        round_dbl(_dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored_q = _pairs(_queries(emb), recon).withColumn("cosine_q", _cos("qv", "vq"))
+    return _rerank(scored_q, "cosine_q", QUANT_CAND_K, emb)
 
 
 _COSQ = _COS.replace("* v[i]", "* vq[i]").replace("list_transform(v,", "list_transform(vq,")
@@ -1527,43 +1448,8 @@ def sim_ivf_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             "codes", lambda c: c.cast("double") * F.col("scale")
         ).alias("vq"),
     )
-    scored_q = (
-        q2c.join(
-            codes,
-            (F.col("probe_cell") == F.col("cl"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .withColumn(
-            "cosine_q",
-            round_dbl(
-                _dot("qv", "vq") / F.nullif(_norm("qv") * _norm("vq"), F.lit(0.0)),
-                6,
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored_q.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= QUANT_CAND_K)
-        .select("query_id", "qv", "neighbor_id")
-    )
-    rerank = F.broadcast(cand).join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v"), "neighbor_id"
-    )
-    scored = rerank.withColumn(
-        "cosine",
-        round_dbl(_dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored_q = _probe_join(q2c, codes).withColumn("cosine_q", _cos("qv", "vq"))
+    return _rerank(scored_q, "cosine_q", QUANT_CAND_K, emb)
 
 
 SIM_IVF_QUANTIZED_ORACLE = f"""{_KMEANS_CELLS_WITH},
@@ -1641,28 +1527,17 @@ def _ivf_append_index(
         # nlist sizes off the BASE corpus — the codebook is frozen at
         # train time, so later ingests never change it (the oracle's
         # params CTE computes from the same base subset)
-        cent_rows, cells, nlist = _kmeans_cells(base)
         path = os.path.join(tempfile.mkdtemp(prefix="ivf_app_"), "cells")
-        (
-            cells.withColumn("scale", _sq8_scale("v"))
-            .withColumn("codes", _sq8_codes("v", "scale"))
-            .write.partitionBy("cl")
-            .parquet(path)
-        )
+        try:
+            cent_rows, cells, nlist = _kmeans_cells(base)
+            _write_cells(cells, path)
+        finally:
+            base.unpersist()  # the training persist; cells are on disk now
         # footer-only count of the just-written TRAINED corpus — the
         # maintenance policy's recluster signal is (rows - trained_rows)
         # / trained_rows (llmdata/maintenance.py)
         trained = spark.read.parquet(path).count()
-        (
-            _assign_to(arrivals, cent_rows)
-            .withColumn("scale", _sq8_scale("v"))
-            .withColumn("codes", _sq8_codes("v", "scale"))
-            .write.mode("append")
-            .partitionBy("cl")
-            .parquet(path)
-        )
-        from ..operators.layout import write_store_meta
-
+        _write_cells(_assign_to(arrivals, cent_rows), path, "append")
         write_store_meta(path, trained_rows=int(trained), nlist=int(nlist))
         _calibrate_store_nprobe(spark, path, cent_rows, nlist)
         return cent_rows, path, nlist
@@ -1678,9 +1553,7 @@ def sim_ivf_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-checked cross-engine (results differ from ``sim_ivf_topk``
     exactly where the codebook differs — that IS the contract)."""
     cent_rows, path, nlist = _ivf_append_index(spark, sf_dir)
-    cells = spark.read.parquet(path).select(
-        "vec_id", "v", F.col("cl").cast("int").alias("cl")
-    )
+    cells = _read_cells(spark, path, "vec_id", "v")
     return _ivf_search(spark, sf_dir, cent_rows, cells, _nprobe_for(nlist))
 
 
@@ -1714,7 +1587,6 @@ def recluster_ivf_store(
     ``read_store_meta`` probe instead (operators/layout.py)."""
     import shutil
 
-    from ..operators.layout import write_store_meta
     from ..streaming.incremental import _swap_dir
 
     def rebuild():
@@ -1722,13 +1594,7 @@ def recluster_ivf_store(
         new_cent, cells, nlist = _kmeans_cells_for(spark, sf_dir)
         staging = path.rstrip("/") + "._recluster"
         shutil.rmtree(staging, ignore_errors=True)
-        (
-            cells.withColumn("scale", _sq8_scale("v"))
-            .withColumn("codes", _sq8_codes("v", "scale"))
-            .repartition(F.col("cl"))
-            .write.partitionBy("cl")
-            .parquet(staging)
-        )
+        _write_cells(cells.repartition(F.col("cl")), staging)
         _swap_dir(staging, path)
         # the recluster trained on the FULL current corpus, so the
         # maintenance policy's arrival fraction resets to zero here
@@ -1825,12 +1691,8 @@ def sim_ivf_search_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     switched: this face is the deployment's serving path, they are its
     verification anchors."""
     cent_rows, path, nlist = _ivf_append_index(spark, sf_dir)
-    cells = spark.read.parquet(path).select(
-        "vec_id", "v", F.col("cl").cast("int").alias("cl")
-    )
-    return _ivf_search(
-        spark, sf_dir, cent_rows, cells, _store_nprobe(nlist, path)
-    )
+    cells = _read_cells(spark, path, "vec_id", "v")
+    return _ivf_search(spark, sf_dir, cent_rows, cells, _store_nprobe(nlist, path))
 
 
 def _calibrated_append_oracle() -> str:
@@ -1954,75 +1816,37 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE Arrow batch, and inside a cell one BLAS matmul scores
     probers x primary-members (an expression-path candidate join at this
     fan-out was measured in the minutes at 10x — 50M decimal-rounded
-    zip_with cosines). The kernel emits only candidates within
-    ``_NEG_SLACK`` of each row's k-th best raw cosine — the provable
-    superset of the rounded top-k (grid rounding moves a raw score by
-    < 5e-7) — and the authoritative round + rank happen JVM-side where
-    the oracle's half-up decimal grid is reproduced exactly."""
+    zip_with cosines). The kernel emits only each row's k-th-with-slack
+    survivors (:func:`_kth_keep`)."""
     import pandas as pd
 
     emb = _emb(spark, sf_dir)
     cent_rows, _cells, _nlist = _kmeans_cells_for(spark, sf_dir)
     probed = _assign_topk(emb, cent_rows, KNN_PROBE, with_rank=True)
 
-    _empty = pd.DataFrame(
-        {
-            "src_id": pd.Series(dtype="int64"),
-            "neighbor_id": pd.Series(dtype="int64"),
-            "raw_cosine": pd.Series(dtype="float64"),
-        }
-    )
-
     def _cell_knn(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(pdf) < 2:
-            return _empty
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        primary = (pdf["crank"].to_numpy()[order]) == 1
-        if not primary.any():
-            return _empty
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+        pdf = pdf.sort_values("vec_id")
         # candidates are the cell's PRIMARY members only (a neighbor is
         # primary in exactly one cell, so no pair repeats across groups):
-        # score probers x members, not the full probers^2 block — the
-        # matrix is probe-factor smaller, which is what keeps per-group
-        # memory flat as the probe width grows
-        mem_idx = np.nonzero(primary)[0]
-        S = Vn @ Vn[mem_idx].T
-        self_mask = mem_idx[None, :] == np.arange(len(ids))[:, None]
-        masked = np.where(self_mask, -np.inf, S)
-        if masked.shape[1] > KNN_K:
-            kth = np.partition(masked, -KNN_K, axis=1)[:, -KNN_K]
-        else:
-            kth = np.full(masked.shape[0], -np.inf)
-        keep = (~self_mask) & (S >= (kth - _NEG_SLACK)[:, None])
-        ii, jj = np.nonzero(keep)
-        if len(ii) == 0:
-            return _empty
+        # probers x members, not the full probers^2 block — the matrix is
+        # probe-factor smaller, which keeps per-group memory flat as the
+        # probe width grows
+        ids, mem, S = _block(pdf, pdf["crank"].to_numpy() == 1)
+        not_self = mem[None, :] != np.arange(len(ids))[:, None]
+        ii, jj = np.nonzero(_kth_keep(S, not_self, KNN_K))
         return pd.DataFrame(
-            {
-                "src_id": ids[ii],
-                "neighbor_id": ids[mem_idx[jj]],
-                "raw_cosine": S[ii, jj],
-            }
+            {"src_id": ids[ii], "neighbor_id": ids[mem[jj]], "raw_cosine": S[ii, jj]}
         )
 
     pairs = probed.groupBy("cl").applyInPandas(
         _cell_knn, "src_id long, neighbor_id long, raw_cosine double"
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("cosine", round_dbl(F.col("raw_cosine"), 6))
-        .withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= KNN_K)
-        .select("src_id", "knn_rank", "neighbor_id", "cosine")
-    )
+    return _top(
+        pairs.withColumn("cosine", round_dbl(F.col("raw_cosine"), 6)),
+        "src_id", "cosine", "neighbor_id", KNN_K, "knn_rank",
+    ).select("src_id", "knn_rank", "neighbor_id", "cosine")
 
 
 _CCOS_S = _CCOS_V.replace("(v", "(sv").replace(" v[i]", " sv[i]")
@@ -2074,7 +1898,8 @@ def sim_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the cross-group edge set comes from the SAME cell-bounded
     BLAS kernel as the k-NN graph / hard negatives (per-cell probers x
     primary-members matmul, per-anchor k-th-with-slack superset — the
-    per-cell survivor set provably contains every global top-k edge);
+    per-cell survivor set contains every global top-k edge, see
+    :func:`_kth_keep`);
     normalizers are per-anchor averages of <= K grid-rounded cosines
     (exact integer-grid sums, engine-identical); the margin itself is
     plain arithmetic on already-rounded values. No all-pairs stage
@@ -2087,48 +1912,22 @@ def sim_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cent_rows, BITEXT_PROBE, extra=("label",), with_rank=True
     )
 
-    _empty = pd.DataFrame(
-        {
-            "src_id": pd.Series(dtype="int64"),
-            "src_group": pd.Series(dtype="int32"),
-            "dst_id": pd.Series(dtype="int64"),
-            "raw_cosine": pd.Series(dtype="float64"),
-        }
-    )
-
     def _cell_edges(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        if len(pdf) < 2:
-            return _empty
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        group = (pdf["label"].to_numpy()[order] % 2).astype(np.int32)
-        primary = (pdf["crank"].to_numpy()[order]) == 1
-        mem_idx = np.nonzero(primary)[0]
-        if len(mem_idx) == 0:
-            return _empty
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        S = Vn @ Vn[mem_idx].T
+        pdf = pdf.sort_values("vec_id")
+        ids, mem, S = _block(pdf, pdf["crank"].to_numpy() == 1)
+        group = (pdf["label"].to_numpy() % 2).astype(np.int32)
         # cross-group candidates only (and never self)
-        cross = group[mem_idx][None, :] != group[:, None]
-        cand = cross & (mem_idx[None, :] != np.arange(len(ids))[:, None])
-        masked = np.where(cand, S, -np.inf)
-        if masked.shape[1] > BITEXT_K:
-            kth = np.partition(masked, -BITEXT_K, axis=1)[:, -BITEXT_K]
-        else:
-            kth = np.full(masked.shape[0], -np.inf)
-        keep = cand & (S >= (kth - _NEG_SLACK)[:, None])
-        ii, jj = np.nonzero(keep)
-        if len(ii) == 0:
-            return _empty
+        cand = (group[mem][None, :] != group[:, None]) & (
+            mem[None, :] != np.arange(len(ids))[:, None]
+        )
+        ii, jj = np.nonzero(_kth_keep(S, cand, BITEXT_K))
         return pd.DataFrame(
             {
                 "src_id": ids[ii],
                 "src_group": group[ii],
-                "dst_id": ids[mem_idx[jj]],
+                "dst_id": ids[mem[jj]],
                 "raw_cosine": S[ii, jj],
             }
         )
@@ -2137,15 +1936,10 @@ def sim_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cell_edges,
         "src_id long, src_group int, dst_id long, raw_cosine double",
     )
-    wk = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("dst_id").asc()
-    )
-    edges = (
-        raw.withColumn("cosine", round_dbl(F.col("raw_cosine"), 6))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= BITEXT_K)
-        .select("src_id", "src_group", "dst_id", "cosine")
-    )
+    edges = _top(
+        raw.withColumn("cosine", round_dbl(F.col("raw_cosine"), 6)),
+        "src_id", "cosine", "dst_id", BITEXT_K, "rk",
+    ).select("src_id", "src_group", "dst_id", "cosine")
     norms = edges.groupBy(F.col("src_id").alias("n_id")).agg(
         F.avg("cosine").alias("n_avg")
     )
@@ -2168,11 +1962,8 @@ def sim_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    wm = Window.partitionBy("src_id").orderBy(
-        F.col("margin").desc(), F.col("dst_id").asc()
-    )
     return (
-        fwd.withColumn("mrk", F.row_number().over(wm))
+        _rank(fwd, "src_id", "margin", "dst_id", "mrk")
         .filter(F.col("mrk") == 1)
         .select(
             "src_id",
@@ -2251,18 +2042,9 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a query-partitioned window over the (already radius-filtered)
     match set — output-bounded, no single-partition stage."""
     cent_rows, cells, nlist = _kmeans_cells_for(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    q2c = _probe_cells(spark, emb, cent_rows, _nprobe_for(nlist))
-    scored = q2c.join(
-        cells.select(F.col("vec_id").alias("neighbor_id"), "cl", "v"),
-        (F.col("probe_cell") == F.col("cl"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).withColumn(
-        "cosine",
-        round_dbl(
-            _dot("qv", "v") / F.nullif(_norm("qv") * _norm("v"), F.lit(0.0)), 6
-        ),
-    )
+    scored = _ivf_candidates(
+        spark, sf_dir, cent_rows, cells, _nprobe_for(nlist)
+    ).withColumn("cosine", _cos("qv", "v"))
     matches = scored.filter(F.col("cosine") >= RANGE_TAU)
     return matches.select(
         "query_id",

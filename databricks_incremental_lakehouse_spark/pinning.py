@@ -75,3 +75,14 @@ def pin(df: DataFrame) -> DataFrame:
     if mode == "checkpoint":
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def unpin(df: DataFrame) -> None:
+    """Release a frame :func:`pin` returned, now rather than whenever the
+    ContextCleaner collects it: unpersist it, or the (locally)
+    checkpointed RDD under it. A reliable checkpoint's files stay."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()

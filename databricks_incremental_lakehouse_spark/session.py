@@ -62,6 +62,9 @@ RUNTIME_CONFS: dict[str, str] = {
 # two above the whole registry's set, so no session of this engine evicts.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# the directory that holds this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 # SPARK_GRAFT_STATESTORE values -> streaming state-store provider class
 _STATE_STORES = {
@@ -138,6 +141,10 @@ def build_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Arrow for the (few) Pandas-UDF paths in llmdata.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # those UDFs call package functions, which a Python worker
+        # unpickles by import: put the package root on the workers' path,
+        # whatever directory the driver was started from
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "false")
         # Keep stdout clean: bench.py's machine-readable tail line must not
         # compete with progress-bar redraws in the consumer's buffer.

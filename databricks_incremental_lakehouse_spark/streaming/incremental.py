@@ -1101,6 +1101,11 @@ def _read_totals(spark: SparkSession, target_path: str) -> DataFrame:
     )
 
 
+# byte width of each integral Spark type (by typeName): a batch's group
+# column may widen into a stored integral column at least as wide
+_INT_WIDTH = {"byte": 1, "short": 2, "integer": 4, "long": 8}
+
+
 def apply_cdf_delta(
     batch_df: DataFrame,
     target_path: str,
@@ -1178,6 +1183,17 @@ def apply_cdf_delta(
         schema = read_merge_target(sess, target_path).schema
     if sorted(delta.columns) != sorted(schema.fieldNames()):
         raise ValueError(f"cdf delta {delta.schema} does not match {target_path!r}")
+    # a group column must have the stored type, or be an integral type
+    # narrower than a stored integral type. Checked before the coalesce
+    # below, whose coercion would silently turn a long into a stored string.
+    stored = {f.name: f.dataType for f in schema.fields}
+    for f in delta.schema.fields:
+        if f.name in group_cols and f.dataType != stored[f.name]:
+            width = _INT_WIDTH.get(f.dataType.typeName())
+            if width is None or width > _INT_WIDTH.get(stored[f.name].typeName(), 0):
+                raise ValueError(
+                    f"cdf delta {delta.schema} does not match {target_path!r}"
+                )
     # coalescing with a NULL of the stored type widens a narrower group
     # column to it; a wider one would split the table's physical type
     delta = delta.select(

@@ -2524,3 +2524,51 @@ def test_drain_once_refuses_a_partial_sink(spark, sf_smoke):
     assert again == target and len(queries) == 3
     memo.drop(spark, key)
     assert not os.path.exists(roots[-1])
+
+
+def test_cdf_delta_group_column_type_check(spark, tmp_path):
+    """A batch whose group column has another type than the stored one is
+    refused unless it is an integral type no wider than a stored integral
+    type: a ``long`` group into a ``string`` target must raise (Spark's
+    coalesce coercion would otherwise store the string "1"), while an
+    ``int`` group still folds into a ``long`` target."""
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+    )
+
+    s_totals = str(tmp_path / "s_totals")
+    apply_cdf_delta(
+        spark.createDataFrame([("1", 2.0, "insert")], "g string, v double, _op string"),
+        s_totals, ["g"], ["v"],
+    )
+    before = _snapshot(s_totals)
+    with pytest.raises(ValueError):
+        apply_cdf_delta(
+            spark.createDataFrame([(1, 3.0, "insert")], "g long, v double, _op string"),
+            s_totals, ["g"], ["v"],
+        )
+    assert _snapshot(s_totals) == before
+    got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, s_totals).collect()}
+    assert got == {"1": (1, 2.0)}
+
+    l_totals = str(tmp_path / "l_totals")
+    apply_cdf_delta(
+        spark.createDataFrame([(1, 2.0, "insert")], "g long, v double, _op string"),
+        l_totals, ["g"], ["v"],
+    )
+    apply_cdf_delta(
+        spark.createDataFrame(
+            [(1, 3.0, "insert"), (2, 1.0, "insert")], "g int, v double, _op string"
+        ),
+        l_totals, ["g"], ["v"],
+    )
+    totals = read_cdf_totals(spark, l_totals)
+    assert dict(totals.dtypes)["g"] == "bigint"
+    got = {r.g: (r.n_rows, r.sum_v) for r in totals.collect()}
+    assert got == {1: (2, 5.0), 2: (1, 1.0)}
+    with pytest.raises(ValueError):
+        apply_cdf_delta(
+            spark.createDataFrame([(1.5, 1.0, "insert")], "g double, v double, _op string"),
+            l_totals, ["g"], ["v"],
+        )
